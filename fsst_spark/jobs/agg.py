@@ -50,8 +50,7 @@ from .decode import (
     _zone_key,
     chunk_repartition,
     column_arrow_types,
-    pruned_chunks,
-    pruned_chunks_any,
+    scan_chunks,
 )
 _INT_LIKE = ("int8", "int16", "int32", "int64")
 
@@ -167,14 +166,11 @@ def _arrow_mask(arr: pa.Array, op: str, value, arrow_name: str) -> np.ndarray:
 
 
 def _assembled_chunks(batches: Iterator[pa.RecordBatch],
-                      needed: list[str],
-                      with_keys: bool = False) -> Iterator:
-    """Group a (pid, chunk_id)-co-located chunk-row stream back into whole
-    chunks: yields {column: enc-dict} once every needed column row of a
-    chunk has arrived (same pending-slot shape as decode_job's task).
-    ``with_keys`` yields ``((pid, chunk_id), cols)`` instead — consumers
-    that look up per-chunk side state (e.g. delete tombstones) need the
-    key."""
+                      needed: list[str]) -> Iterator:
+    """Group a (pid, chunk_id)-co-located chunk-row stream (the
+    ``chunk_repartition`` output of the metadata tri-state paths) back
+    into whole chunks: yields ``((pid, chunk_id), {column: enc})`` once
+    every needed column row of a chunk has arrived."""
     pending: dict[tuple[int, int], dict[str, dict]] = {}
     for batch in batches:
         for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
@@ -189,7 +185,7 @@ def _assembled_chunks(batches: Iterator[pa.RecordBatch],
                 "payload": payload_s.as_py(),
             }
             if len(cols) == len(needed):
-                yield (key, cols) if with_keys else cols
+                yield key, cols
                 del pending[key]
     if pending:
         raise RuntimeError(
@@ -261,14 +257,14 @@ def _group_partial(kenc: dict, kt: pa.DataType, mask: np.ndarray | None,
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-def _filtered_group_agg(spark, out_dir: str, key_col: str,
+def _pruned_group_agg(spark, out_dir: str, key_col: str,
                         val_col: str | None,
                         filters: list[tuple]) -> DataFrame:
-    """Shared filtered path of encoded_group_count/encoded_group_sum:
-    zone/dict pruning drops definite-miss chunks before any payload read,
-    surviving chunks shuffle once on the chunk key (encoded bytes, small),
-    the exact row mask and the per-key partials happen chunk-locally, and
-    the final shuffle is NDV-scale."""
+    """Shared engine of encoded_group_sum and the filtered
+    encoded_group_count: the pruned chunk-file reader drops definite-miss
+    chunks before any payload read, the exact row mask and the per-key
+    partials happen chunk-locally in the file's task, and the one shuffle
+    is NDV-scale."""
     types = column_arrow_types(spark, out_dir)
     fcols = []
     for f in filters:
@@ -283,19 +279,15 @@ def _filtered_group_agg(spark, out_dir: str, key_col: str,
     int_sum = val_col is not None and types[val_col] in _INT_LIKE
     if val_col is not None and not int_sum and types[val_col] not in ("float", "double"):
         raise ValueError(f"sum column must be int or float, got {types[val_col]}")
-    chunks = pruned_chunks(spark, out_dir, needed, list(filters))
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
     from .deletes import has_deletes
 
     deletes_on = has_deletes(out_dir)
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def task(chunks) -> Iterator[pa.RecordBatch]:
         from .deletes import DeleteMask
 
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+        for key, _, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, filters, types, decoded)
             if mask is not None and not mask.any():
@@ -312,7 +304,9 @@ def _filtered_group_agg(spark, out_dir: str, key_col: str,
     if val_col is not None:
         ddl += f", sum_val {'bigint' if int_sum else 'double'}"
         aggs.append(F.sum("sum_val").alias("sum_val"))
-    return chunks.mapInArrow(task, ddl).groupBy("value").agg(*aggs)
+    return (scan_chunks(spark, out_dir, needed, task, ddl, list(filters),
+                        types=types)
+            .groupBy("value").agg(*aggs))
 
 
 def encoded_group_count(spark, out_dir: str, column: str,
@@ -335,7 +329,7 @@ def encoded_group_count(spark, out_dir: str, column: str,
     the deletes parquet); tombstone-free chunks keep the pure
     codec-structural fast path."""
     if filters:
-        return _filtered_group_agg(spark, out_dir, column, None, filters)
+        return _pruned_group_agg(spark, out_dir, column, None, filters)
     from .deletes import has_deletes
 
     deletes_on = has_deletes(out_dir)
@@ -401,82 +395,13 @@ def encoded_group_sum(spark, out_dir: str, key_col: str, val_col: str,
     ``encoded_group_count``).
 
     Both column rows of a chunk are written into the same chunk file by
-    every encode job, so each scan task sees complete chunks; partial
-    aggregation happens chunk-locally and the shuffle is NDV-scale. A
-    dict-coded key column uses its code array directly — the expanded
-    key strings are never materialized. Delete-aware: tombstoned
+    every encode job, so each task of the chunk-file reader sees complete
+    chunks; partial aggregation happens chunk-locally and the shuffle is
+    NDV-scale. A dict-coded key column uses its code array directly — the
+    expanded key strings are never materialized. Delete-aware: tombstoned
     positions drop out of both cnt and sum_val chunk-locally."""
-    if filters:
-        return _filtered_group_agg(spark, out_dir, key_col, val_col, filters)
-    from .deletes import has_deletes
-
-    deletes_on = has_deletes(out_dir)
-    types = column_arrow_types(spark, out_dir, [key_col, val_col])
-    for c in (key_col, val_col):
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-    vt_name = types[val_col]
-    if vt_name not in _INT_LIKE and vt_name not in ("float", "double"):
-        raise ValueError(f"sum column must be int or float, got {vt_name}")
-    int_sum = vt_name in _INT_LIKE
-    kt = parse_arrow_type(types[key_col])
-
-    def emit(kenc: dict, venc: dict,
-             drop_pos: "np.ndarray | None" = None) -> pa.RecordBatch:
-        return _group_partial(kenc, kt, None, venc=venc, int_sum=int_sum,
-                              drop_pos=drop_pos)
-
-    # file-granular scan: every encode job writes ALL column rows of a
-    # chunk into one chunk file, but a relational parquet scan may split
-    # a file across tasks at row-group boundaries and separate them. One
-    # task per file guarantees complete chunks (a chunk file is one
-    # encode partition's output — tens of MB, a single task's working
-    # set by design, same contract as encode_files_job).
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(out_dir, "chunks", "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no chunk files under {out_dir}")
-    task_df = spark.createDataFrame(
-        [(i, f) for i, f in enumerate(files)], "fid int, path string"
-    ).repartitionByRange(len(files), "fid")
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as _pq
-
-        from .deletes import DeleteMask
-
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for batch in batches:
-            for row in batch.to_pylist():
-                tbl = _pq.read_table(
-                    row["path"],
-                    columns=["pid", "chunk_id", "column", "codec", "params", "payload"],
-                    filters=[("column", "in", [key_col, val_col])])
-                pending: dict[tuple[int, int], dict[str, dict]] = {}
-                for i in range(tbl.num_rows):
-                    key = (tbl.column("pid")[i].as_py(), tbl.column("chunk_id")[i].as_py())
-                    enc = {"codec": tbl.column("codec")[i].as_py(),
-                           "params": json.loads(tbl.column("params")[i].as_py()),
-                           "payload": tbl.column("payload")[i].as_py()}
-                    cols = pending.setdefault(key, {})
-                    cols[tbl.column("column")[i].as_py()] = enc
-                    if len(cols) == 2:
-                        pos = (dmask.positions(*key)
-                               if dmask is not None else None)
-                        yield emit(cols[key_col], cols[val_col], pos)
-                        del pending[key]
-                if pending:
-                    raise RuntimeError(
-                        f"incomplete chunks in {row['path']}: "
-                        f"{sorted(pending)[:4]}")
-
-    ddl = (f"value {_spark_type(types[key_col])}, cnt bigint, "
-           f"sum_val {'bigint' if int_sum else 'double'}")
-    partial = task_df.mapInArrow(task, ddl)
-    return partial.groupBy("value").agg(
-        F.sum("cnt").alias("cnt"), F.sum("sum_val").alias("sum_val"))
+    return _pruned_group_agg(spark, out_dir, key_col, val_col,
+                               list(filters or []))
 
 
 def _zone_can_pred(arrow_name: str, op: str, value):
@@ -655,7 +580,7 @@ def encoded_count_filtered(spark, out_dir: str,
         from .deletes import DeleteMask
 
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, fcols, with_keys=True):
+        for key, cols in _assembled_chunks(batches, fcols):
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if any_flt:
@@ -748,19 +673,15 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
     from .deletes import has_deletes
 
     deletes_on = has_deletes(out_dir)
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def task(chunks) -> Iterator[pa.RecordBatch]:
         from .deletes import DeleteMask
 
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+        for key, _, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if mask is not None and not mask.any():
@@ -803,7 +724,7 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, n_rows bigint, "
            "n_values bigint, s bigint, mn bigint, mx bigint")
-    part = chunks.mapInArrow(task, ddl)
+    part = scan_chunks(spark, out_dir, needed, task, ddl, flt, types=types)
     agg = part.groupBy("value").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_values").alias("n_values"),
@@ -891,19 +812,15 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
     from .deletes import has_deletes
 
     deletes_on = has_deletes(out_dir)
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def task(chunks) -> Iterator[pa.RecordBatch]:
         from .deletes import DeleteMask
 
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+        for key, _, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if mask is not None and not mask.any():
@@ -945,7 +862,7 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, "
            f"val {_spark_type(types[val_col])}")
-    return chunks.mapInArrow(task, ddl)
+    return scan_chunks(spark, out_dir, needed, task, ddl, flt, types=types)
 
 
 def encoded_group_ndv(spark, out_dir: str, key_col: str, val_col: str,
@@ -1012,19 +929,15 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
     from .deletes import has_deletes
 
     deletes_on = has_deletes(out_dir)
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def task(chunks) -> Iterator[pa.RecordBatch]:
         from .deletes import DeleteMask
 
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+        for key, _, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if mask is not None and not mask.any():
@@ -1058,7 +971,7 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, "
            f"val {_spark_type(types[val_col])}, cnt bigint")
-    partial = chunks.mapInArrow(task, ddl)
+    partial = scan_chunks(spark, out_dir, needed, task, ddl, flt, types=types)
     totals = partial.groupBy("value", "val").agg(F.sum("cnt").alias("cnt"))
 
     def local_prune(pdfs):
@@ -1129,57 +1042,16 @@ def encoded_histogram(spark, out_dir: str, column: str, bucket_width: int,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    if any_flt:
-        any_keep = (pruned_chunks_any(spark, out_dir, needed, any_flt)
-                    .select("pid", "chunk_id").distinct())
-        chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
     from .deletes import _deletes_dir, has_deletes
 
     deletes_on = has_deletes(out_dir)
     w = int(bucket_width)
 
-    if not flt and not any_flt and "zmin_long" in chunks.columns:
-        z = chunks.filter(F.col("column") == column).select(
-            "pid", "chunk_id", "n_rows", "zmin_long", "zmax_long",
-            F.col("params").contains('"n_total"').alias("has_nulls"))
-        # exact int64 floor division (x - pmod(x, w)) div w — Spark's `/`
-        # is double division and loses integers past 2^53
-        def _fdiv(col: str):
-            return F.expr(f"({col} - pmod({col}, {w})) div {w}")
-
-        full = (F.col("zmin_long").isNotNull() & ~F.col("has_nulls")
-                & (_fdiv("zmin_long") == _fdiv("zmax_long")))
-        cls = z.select("pid", "chunk_id", "n_rows", "zmin_long",
-                       full.alias("full"))
-        if deletes_on:
-            tomb = (spark.read.parquet(_deletes_dir(out_dir))
-                    .groupBy("pid", "chunk_id")
-                    .agg(F.count("*").alias("n_del")))
-            cls = (cls.join(F.broadcast(tomb), ["pid", "chunk_id"], "left")
-                   .na.fill({"n_del": 0}))
-        else:
-            cls = cls.withColumn("n_del", F.lit(0))
-        meta = (cls.filter("full")
-                .select(F.expr(f"(zmin_long - pmod(zmin_long, {w})) div {w}")
-                        .cast("long").alias("bucket"),
-                        (F.col("n_rows") - F.col("n_del")).cast("long")
-                        .alias("cnt")))
-        boundary_keys = cls.filter(~F.col("full")).select("pid", "chunk_id")
-        sub = (chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload")
-               .join(boundary_keys, ["pid", "chunk_id"], "left_semi"))
-    else:
-        meta = None
-        sub = chunks.select("pid", "chunk_id", "column", "codec",
-                            "params", "payload")
-    sub = chunk_repartition(spark, sub, out_dir)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def task(chunks) -> Iterator[pa.RecordBatch]:
         from .deletes import DeleteMask
 
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+        for key, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if any_flt:
@@ -1215,7 +1087,52 @@ def encoded_histogram(spark, out_dir: str, column: str, bucket_width: int,
                  pa.array(out_c, type=pa.int64())],
                 names=["bucket", "cnt"])
 
-    part = sub.mapInArrow(task, "bucket bigint, cnt bigint")
+    ddl = "bucket bigint, cnt bigint"
+    if flt or any_flt:
+        # the predicates need exact row masks: every surviving chunk of
+        # the pruned chunk-file reader decodes
+        part = scan_chunks(spark, out_dir, needed,
+                           lambda chunks: task((k, c) for k, _, c in chunks),
+                           ddl, flt, any_flt, types=types)
+        return part.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
+    chunks = _chunks_df(spark, out_dir, needed)
+    if "zmin_long" in chunks.columns:
+        z = chunks.filter(F.col("column") == column).select(
+            "pid", "chunk_id", "n_rows", "zmin_long", "zmax_long",
+            F.col("params").contains('"n_total"').alias("has_nulls"))
+        # exact int64 floor division (x - pmod(x, w)) div w — Spark's `/`
+        # is double division and loses integers past 2^53
+        def _fdiv(col: str):
+            return F.expr(f"({col} - pmod({col}, {w})) div {w}")
+
+        full = (F.col("zmin_long").isNotNull() & ~F.col("has_nulls")
+                & (_fdiv("zmin_long") == _fdiv("zmax_long")))
+        cls = z.select("pid", "chunk_id", "n_rows", "zmin_long",
+                       full.alias("full"))
+        if deletes_on:
+            tomb = (spark.read.parquet(_deletes_dir(out_dir))
+                    .groupBy("pid", "chunk_id")
+                    .agg(F.count("*").alias("n_del")))
+            cls = (cls.join(F.broadcast(tomb), ["pid", "chunk_id"], "left")
+                   .na.fill({"n_del": 0}))
+        else:
+            cls = cls.withColumn("n_del", F.lit(0))
+        meta = (cls.filter("full")
+                .select(F.expr(f"(zmin_long - pmod(zmin_long, {w})) div {w}")
+                        .cast("long").alias("bucket"),
+                        (F.col("n_rows") - F.col("n_del")).cast("long")
+                        .alias("cnt")))
+        boundary_keys = cls.filter(~F.col("full")).select("pid", "chunk_id")
+        sub = (chunks.select("pid", "chunk_id", "column", "codec",
+                             "params", "payload")
+               .join(boundary_keys, ["pid", "chunk_id"], "left_semi"))
+    else:
+        meta = None
+        sub = chunks.select("pid", "chunk_id", "column", "codec",
+                            "params", "payload")
+    sub = chunk_repartition(spark, sub, out_dir)
+    part = sub.mapInArrow(
+        lambda batches: task(_assembled_chunks(batches, needed)), ddl)
     if meta is not None:
         part = part.unionByName(meta)
     return part.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))

@@ -193,13 +193,6 @@ def main(argv: list[str] | None = None) -> int:
     dec.add_argument("--limit", type=int, default=None, metavar="N",
                      help="LIMIT pushdown: return N rows decoding only the "
                           "chunks the limit needs (composes with --where)")
-    dec.add_argument("--ordered", action="store_true",
-                     help="write the decoded rows in global (pid, chunk_id"
-                          ", row) order — cluster-key order on a clustered "
-                          "store — via a range partition of the chunk "
-                          "metadata, no row-level sort (plain full decode "
-                          "only: excludes --where/--limit/--sample/"
-                          "--since)")
     dec.add_argument("--sample", type=int, default=None, metavar="N",
                      help="uniform deterministic row sample of ~N rows "
                           "decoding only the chunks the sample needs "
@@ -791,8 +784,7 @@ def main(argv: list[str] | None = None) -> int:
                 from fsst_spark.jobs.decode import decode_sample
 
                 if (filters or any_flt or args.limit is not None
-                        or args.since is not None or args.as_of is not None
-                        or args.ordered):
+                        or args.since is not None or args.as_of is not None):
                     raise SystemExit("--sample composes with --columns/"
                                      "--partition-by only")
                 if not args.sample_key:
@@ -803,27 +795,20 @@ def main(argv: list[str] | None = None) -> int:
                 from fsst_spark.jobs.decode import decode_head
 
                 if args.since is not None or args.as_of is not None \
-                        or any_flt or args.ordered:
+                        or any_flt:
                     raise SystemExit("--limit composes with --where only")
                 df = decode_head(spark, args.data, args.limit,
                                  columns=cols, filters=filters)
             elif args.since is not None:
-                if args.ordered:
-                    raise SystemExit("--ordered is a plain full decode "
-                                     "(no --since)")
                 df = decode_changes(spark, args.data, args.since, args.until,
                                     columns=cols, filters=filters,
                                     any_filters=any_flt)
             elif filters or any_flt:
-                if args.ordered:
-                    raise SystemExit("--ordered is a plain full decode "
-                                     "(no --where/--where-any)")
                 df = decode_filtered(spark, args.data, columns=cols,
                                      filters=filters, any_filters=any_flt,
                                      as_of=args.as_of)
             else:
-                df = decode_job(spark, args.data, cols, as_of=args.as_of,
-                                ordered=args.ordered)
+                df = decode_job(spark, args.data, cols, as_of=args.as_of)
             w = df.drop("pid", "chunk_id").write.mode("overwrite")
             if args.partition_by:
                 w = w.partitionBy(*args.partition_by.split(","))

@@ -1,23 +1,28 @@
 """Distributed decode job: encoded chunks -> original columns.
 
 Reads the chunk table written by ``encode_job`` and reconstructs the
-original columns, bit-identical. Decoding needs only the chunk rows (the
-symbol table travels inside each FSST payload section), so this is a pure
-``mapInArrow`` scan with no joins. Column pruning pushes down into the
-chunk parquet: asking for a column subset filters chunk rows by the
-``column`` field *at the scan* (Catalyst predicate pushdown), so unneeded
-payload bytes are never read.
+original columns, bit-identical. Every store read that needs chunk
+payloads goes through one reader (:func:`scan_chunks`): a
+``spark.range(0, n, 1, n)`` task list over the store's chunk files in pid
+order, one ``mapInArrow`` task per file. The task runs the single pruner
+(zone maps, ``str_dict`` dictionaries, Bloom filters, OR clauses, pid and
+chunk-key restrictions — :class:`_ChunkFile`) over its file's narrow
+metadata columns, then reads and decodes only the surviving chunks'
+rows. No chunk row crosses a shuffle, a fully pruned file costs a footer
+plus a few narrow columns, and output comes in (pid, chunk_id, row)
+order.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.codecs import decode_column
@@ -209,8 +214,9 @@ def _zone_key(arrow_name: str, value) -> tuple[int, dict]:
 def zone_in_keep_pred(arrow_name: str, value):
     """Spark Column over (zmin_long, zmax_long): the conservative
     chunk-keep test for ``col IN (values)`` — true iff the chunk's zone
-    interval could contain ANY probed value. Shared by ``_zone_prune``
-    and ``agg._zone_can_pred``.
+    interval could contain ANY probed value — the Spark-side twin of the
+    pruner's ``in`` arm, used by the metadata tri-state count
+    (``agg._zone_can_pred``).
 
     Small lists build the plain OR of per-value containment tests (stays
     inside codegen/pushdown). Chaining one OR per value grows the
@@ -270,68 +276,14 @@ def _prefix_zone_bounds(arrow_name: str, value) -> tuple[int, int]:
     return zone_pack8(vb), zone_pack8(vb[:8].ljust(8, b"\xff"))
 
 
-def _zone_prune(chunks: DataFrame, zsrc: DataFrame,
-                zone_filter: tuple[str, str, int | str],
-                arrow_name: str) -> DataFrame:
-    """Drop chunk groups whose zone map proves ``col op value`` matches no
-    row. Conservative: chunks with null zones (all-null chunks,
-    pre-zone-map encodes) are always kept. The zone predicate filters the
-    narrow (pid, chunk_id, zmin, zmax) projection at the parquet scan
-    (PushedFilters), and survivors semi-join back on the narrow chunk key
-    — pruned payload bytes are never read. Dispatch is on the COLUMN's
-    arrow type, never the Python type of the value (a numeric-looking
-    string id must still use prefix zones)."""
-    col, op, value = zone_filter
-    if op in ("contains", "suffix"):
-        # substring/suffix predicates carry no zone information (zones
-        # are PREFIXES; any 8-byte prefix interval can hold a match);
-        # dict/FSST-dictionary pruning (below, in pruned_chunks) is the
-        # only chunk-level lever
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        return chunks
-    if op == "rlike":
-        # regex predicates likewise carry no zone information; dictionary
-        # pruning (when the pattern is Java/Python-alignment-safe) is the
-        # chunk-level lever
-        if arrow_name not in ("string", "large_string"):
-            raise ValueError(
-                f"'rlike' needs a string column; {col!r} is {arrow_name}")
-        return chunks
-    if op == "in":
-        # set membership: a chunk can match iff it can match ANY element
-        pred = zone_in_keep_pred(arrow_name, value)
-    elif op == "prefix":
-        # s LIKE 'p%': every match packs into [pack8(p), pack8(p padded
-        # with 0xff)] — both bounds follow from bytewise order, so the
-        # chunk interval test is exact on the PACKED keys (still a
-        # conservative chunk bound, since zones are themselves prefixes)
-        lo, hi = _prefix_zone_bounds(arrow_name, value)
-        pred = (F.col("zmax_long") >= lo) & (F.col("zmin_long") <= hi)
-    elif op in _ZONE_OPS:
-        zval, ops = _zone_key(arrow_name, value)  # typed: raises on mismatch
-        pred = ops[op](zval)
-    else:
-        raise ValueError(
-            f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, "
-            f"got {op!r}")
-    if "zmin_long" not in chunks.columns:
-        return chunks  # pre-zone-map encode: nothing to prune on
-    keep = (
-        zsrc.filter(F.col("column") == col)
-        .filter(F.col("zmin_long").isNull() | pred)
-        .select("pid", "chunk_id")
-    )
-    return chunks.join(keep, ["pid", "chunk_id"], "left_semi")
-
-
 def _dict_probes(value: "str | bytes | list",
                  prefix: bool = False,
                  contains: bool = False,
                  suffix: bool = False):
     """(length-bucketed probe byte-sets, prefix bytes or None, substring
     bytes or None, suffix bytes or None) for a dictionary membership test
-    — shared prep of ``_dict_value_drop`` and the ``fsst`` DataSource's
-    executor-side pruning. At most one of ``prefix``/``contains``/
+    — the pruner's dictionary arm (see :func:`compile_filters`). At most
+    one of ``prefix``/``contains``/
     ``suffix`` may be set; those modes are single-value."""
     vals = value if isinstance(value, (list, tuple, set)) else [value]
     probes = {v.encode("utf-8", "surrogatepass") if isinstance(v, str) else bytes(v)
@@ -405,38 +357,6 @@ def dict_payload_has_value(params: dict, payload: bytes,
     )
 
 
-def zone_keep(arrow_name: str, op: str, value, zmin, zmax) -> bool:
-    """Pure-Python chunk-survival test for one zone filter — the scalar
-    twin of ``_zone_prune`` for callers outside a Spark plan (the ``fsst``
-    DataSource prunes per chunk file inside ``read()``). Conservative:
-    null zones always keep; string zones are 8-byte prefixes, so strict
-    ops compare non-strictly (same rule as ``_ZONE_OPS_PREFIX``)."""
-    if zmin is None or zmax is None:
-        return True
-    if op in ("contains", "suffix"):
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        return True  # substring/suffix predicates carry no zone info
-    if op == "rlike":
-        return True  # regex predicates carry no zone information
-    if op == "prefix":
-        lo, hi = _prefix_zone_bounds(arrow_name, value)
-        return zmax >= lo and zmin <= hi
-    if op == "in":
-        values = list(value)
-        if not values:
-            raise ValueError("'in' filter needs a non-empty value list")
-        return any(zone_keep(arrow_name, "==", v, zmin, zmax) for v in values)
-    zval, ops = _zone_key(arrow_name, value)
-    exact = ops is _ZONE_OPS  # ints/timestamps/floats: exact zone bounds
-    if op == "==":
-        return zmin <= zval <= zmax
-    if op in (">", ">="):
-        return zmax > zval if (op == ">" and exact) else zmax >= zval
-    if op in ("<", "<="):
-        return zmin < zval if (op == "<" and exact) else zmin <= zval
-    raise ValueError(f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, got {op!r}")
-
-
 # escapes whose Java-regex meaning is BROADER than (or absent from)
 # Python's: \v \h \R \H \V unicode-whitespace classes, \p{...}/\P{...}
 # properties, \Q..\E quoting, \k named backrefs, \G, \X graphemes. Also
@@ -488,224 +408,414 @@ def _rlike_prunable(pattern: str):
         return None
 
 
-def _dict_regex_drop(spark, out_dir: str, col: str,
-                     pattern: str) -> DataFrame:
-    """(pid, chunk_id) DROP-set for ``col RLIKE pattern``: ``str_dict``
-    chunks whose dictionary contains NO value matching the (alignment-
-    safe, see ``_rlike_prunable``) pattern. Same scan shape as
-    ``_dict_value_drop`` — only dict-coded chunk rows of the filter
-    column are read, only the dictionary section decodes."""
-    src = (
-        _chunks_df(spark, out_dir, [col])
-        .filter(F.col("codec") == "str_dict")
-        .select("pid", "chunk_id", "params", "payload")
-    )
+# ---------------------------------------------------------------------------
+# The pruned chunk-file reader. Every store read that needs chunk payloads
+# (decode, verify, the filtered aggregates, deletes, the fsst DataSource)
+# runs one task per chunk file; the task prunes its file with the rules
+# below and decodes only the surviving chunks.
+# ---------------------------------------------------------------------------
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rx = re.compile(pattern, re.ASCII)
-        for batch in batches:
-            pids, cids = [], []
-            for pid_s, cid_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("params"), batch.column("payload")):
-                if not dict_payload_has_value(
-                        json.loads(params_s.as_py()), payload_s.as_py(),
-                        {}, None, None, rx=rx):
-                    pids.append(pid_s.as_py())
-                    cids.append(cid_s.as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(cids, pa.int32())],
-                names=["pid", "chunk_id"])
+_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
 
-    return src.mapInArrow(task, "pid int, chunk_id int")
+# the narrow projection a pruner run reads up front; bloom blobs and the
+# (params, payload) pair load at most once per file, and only when a live
+# chunk needs them
+_META_COLS = ("pid", "chunk_id", "column", "codec", "n_rows", "enc_bytes",
+              "zmin_long", "zmax_long")
 
 
-def _dict_value_drop(spark, out_dir: str, col: str,
-                     value: "str | bytes | list",
-                     prefix: bool = False,
-                     contains: bool = False,
-                     suffix: bool = False) -> DataFrame:
-    """(pid, chunk_id) DROP-set for ``col == value`` (or ``col IN values``
-    when a list is given; ``col LIKE value%`` when ``prefix``; ``col LIKE
-    %value%`` when ``contains``; ``col LIKE %value`` when ``suffix``):
-    the ``str_dict`` chunks whose dictionary
-    provably lacks EVERY probed value — they contain no
-    matching row, so none of their columns need be read or decoded. The
-    pass scans only the filter column's DICT-CODED chunk rows (both the
-    ``column ==`` and ``codec == 'str_dict'`` predicates push to the chunk
-    parquet scan, so non-dict payloads are never read) and decodes only
-    the (tiny) dictionary section — codes stay encoded. On categorical
-    columns (lang, source, content-type) this turns a value probe into a
-    near-metadata scan at 100 TB; on columns with no dict chunks the scan
-    matches zero rows and costs footer reads only."""
-    by_len, pfx, sub, sfx = _dict_probes(value, prefix, contains, suffix)
-    src = (
-        _chunks_df(spark, out_dir, [col])
-        .filter(F.col("codec") == "str_dict")  # pushed: plain/fsst payloads unread
-        .select("pid", "chunk_id", "params", "payload")
-    )
+class _Pruner(NamedTuple):
+    """One ``(col, op, value)`` filter, typed and validated once on the
+    driver. ``zone`` holds the sorted, disjoint packed-value intervals
+    ``(los, his)`` every matching row falls in (None: the op carries no
+    zone information); ``dict_probe`` is ``_dict_probes``' tuple plus an
+    rlike pattern (None: no dictionary arm); ``bloom`` holds the probe
+    values' bloom hashes (None: no bloom arm)."""
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pids, cids = [], []
-            # iterate columns directly: to_pylist() would materialize every
-            # payload into a Python list of dicts before use
-            for pid_s, cid_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("params"), batch.column("payload")):
-                has_value = dict_payload_has_value(
-                    json.loads(params_s.as_py()), payload_s.as_py(),
-                    by_len, pfx, sub, sfx)
-                if not has_value:
-                    pids.append(pid_s.as_py())
-                    cids.append(cid_s.as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(cids, pa.int32())],
-                names=["pid", "chunk_id"])
-
-    return src.mapInArrow(task, "pid int, chunk_id int")
+    col: str
+    zone: "tuple[np.ndarray, np.ndarray] | None"
+    dict_probe: "tuple | None"
+    bloom: "np.ndarray | None"
 
 
-def _bloom_value_drop(spark, out_dir: str, col: str,
-                      value, arrow_name: str) -> DataFrame:
-    """(pid, chunk_id) DROP-set for ``col == value`` / ``col IN values``
-    from per-chunk Bloom filters (``kernel.bloom``): chunks whose bloom
-    proves EVERY probed value absent contain no matching row. This is the
-    point-predicate complement of zone pruning — a ``url == X`` probe over
-    an UNCLUSTERED store, where every 8-byte prefix zone collapses, still
-    tests ~10 bits per chunk instead of decoding payloads. The scan reads
-    only the filter column's (pid, chunk_id, bloom) projection (blooms are
-    ~0.1% of payload bytes); chunks without a bloom (dict-coded — dict
-    pruning covers those exactly — disabled encodes, unsupported types)
-    are conservatively kept."""
+def _zone_intervals(arrow_name: str, op: str, value):
+    """``(los, his)`` int64 arrays for ``_Pruner.zone``. Dispatch is on the
+    COLUMN's arrow type, never the Python type of the value (a
+    numeric-looking string id must still use prefix zones). String zones
+    are 8-byte prefixes, so their strict ops compare non-strictly (the
+    ``_ZONE_OPS_PREFIX`` rule); exact zones shift strict bounds by one."""
+    if op in ("contains", "suffix"):
+        # substring/suffix predicates carry no zone information (zones are
+        # PREFIXES; any prefix interval can hold a match)
+        _prefix_bytes(arrow_name, value, op)  # type check only
+        return None
+    if op == "rlike":
+        if arrow_name not in ("string", "large_string"):
+            raise ValueError(f"'rlike' needs a string column, got {arrow_name}")
+        return None
+    if op == "in":
+        values = list(value)
+        if not values:
+            raise ValueError("'in' filter needs a non-empty value list")
+        # sorted probes: the keep test is one searchsorted per chunk
+        pts = np.unique(np.array(
+            [k for k in (_zone_key(arrow_name, v)[0] for v in values)
+             if _I64_MIN <= k <= _I64_MAX], dtype=np.int64))
+        return pts, pts
+    if op == "prefix":
+        # s LIKE 'p%': every match packs into [pack8(p), pack8(p padded
+        # with 0xff)] — bytewise order makes the interval exact on packs
+        lo, hi = _prefix_zone_bounds(arrow_name, value)
+    elif op in _ZONE_OPS:
+        zv, ops = _zone_key(arrow_name, value)  # typed: raises on mismatch
+        step = 1 if ops is _ZONE_OPS else 0
+        lo, hi = {"==": (zv, zv), ">=": (zv, _I64_MAX),
+                  ">": (zv + step, _I64_MAX), "<=": (_I64_MIN, zv),
+                  "<": (_I64_MIN, zv - step)}[op]
+    else:
+        raise ValueError(
+            f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, "
+            f"got {op!r}")
+    lo, hi = max(lo, _I64_MIN), min(hi, _I64_MAX)
+    if lo > hi:  # e.g. int > int64 max: no row can match
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty
+    return np.array([lo], dtype=np.int64), np.array([hi], dtype=np.int64)
+
+
+def _bloom_hashes(arrow_name: str, value) -> "np.ndarray | None":
+    """Bloom ``h1`` hashes of ``==``/``in`` probe values, hashed the way
+    the encoder hashed the column: strings/bytes natively, ints as-is,
+    timestamps in storage-unit ticks. None for types without blooms."""
+    from ..kernel.bloom import _value_hashes
+
     vals = value if isinstance(value, (list, tuple, set)) else [value]
     if arrow_name in _STRINGY:
-        probes = list(vals)  # bloom hashes str/bytes natively
-    elif arrow_name in _INTY:
-        probes = [int(v) for v in vals]
-    elif arrow_name.startswith("timestamp["):
-        # encode hashed the storage-unit int64 ticks; probe in the same unit
-        probes = [_ts_ticks(arrow_name, v) for v in vals]
+        arr = pa.array([v.encode("utf-8", "surrogatepass")
+                        if isinstance(v, str) else bytes(v) for v in vals],
+                       pa.large_binary())
+    elif arrow_name in _INTY or arrow_name.startswith("timestamp["):
+        ticks = ([int(v) for v in vals] if arrow_name in _INTY
+                 else [_ts_ticks(arrow_name, v) for v in vals])
+        arr = pa.array(np.array([t & 0xFFFFFFFFFFFFFFFF for t in ticks],
+                                dtype=np.uint64).view(np.int64))
     else:
-        return spark.createDataFrame([], "pid int, chunk_id int")
-    src = (
-        _chunks_df(spark, out_dir, [col])
-        .filter(F.col("bloom").isNotNull())  # pushed: bloom-less rows unread
-        .select("pid", "chunk_id", "bloom")
-    )
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..kernel.bloom import bloom_might_contain
-
-        for batch in batches:
-            pids, cids = [], []
-            for pid_s, cid_s, bloom_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("bloom")):
-                if not bloom_might_contain(bloom_s.as_py(), probes):
-                    pids.append(pid_s.as_py())
-                    cids.append(cid_s.as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(cids, pa.int32())],
-                names=["pid", "chunk_id"])
-
-    return src.mapInArrow(task, "pid int, chunk_id int")
+        return None
+    return _value_hashes(arr)
 
 
-def pruned_chunks(spark, out_dir: str, columns: list[str] | None,
-                  filters: list[tuple[str, str, int | str]],
-                  dict_prune: bool = True) -> DataFrame:
-    """Chunk rows for ``columns``, minus every chunk a zone map or a dict
-    dictionary proves cannot match the conjunction ``filters`` — the shared
-    pruning front-end of ``decode_job`` and the encoded-store aggregation
-    ops. No payload outside dict sections is read."""
-    chunks = _chunks_df(spark, out_dir, columns)
-    if filters:
-        types = column_arrow_types(spark, out_dir)  # KeyError guard below
-        for zf in filters:
-            if zf[0] not in types:
-                raise KeyError(f"columns not present in encoded data: [{zf[0]!r}]")
-            # the zone column may be outside the requested column subset, so
-            # each keep-set reads its own (narrow, zone-only) projection
-            zsrc = _chunks_df(spark, out_dir, [zf[0]])
-            chunks = _zone_prune(chunks, zsrc, zf, types[zf[0]])
-            if (dict_prune and zf[1] in ("==", "in", "prefix", "contains",
-                                         "suffix")
-                    and types[zf[0]] in _STRINGY):
-                drop = _dict_value_drop(spark, out_dir, zf[0], zf[2],
-                                        prefix=zf[1] == "prefix",
-                                        contains=zf[1] == "contains",
-                                        suffix=zf[1] == "suffix")
-                chunks = chunks.join(drop, ["pid", "chunk_id"], "left_anti")
-            if (dict_prune and zf[1] == "rlike"
-                    and types[zf[0]] in ("string", "large_string")
-                    and _rlike_prunable(zf[2]) is not None):
-                rdrop = _dict_regex_drop(spark, out_dir, zf[0], zf[2])
-                chunks = chunks.join(rdrop, ["pid", "chunk_id"],
-                                     "left_anti")
-            if (dict_prune and zf[1] in ("==", "in")
-                    and "bloom" in chunks.columns):
-                bdrop = _bloom_value_drop(spark, out_dir, zf[0], zf[2],
-                                          types[zf[0]])
-                chunks = chunks.join(bdrop, ["pid", "chunk_id"], "left_anti")
-    return chunks
+def compile_filters(filters, types: dict[str, str]) -> list[_Pruner]:
+    """Driver-side compile of ``(col, op, value)`` filters for the pruner.
+    Raises KeyError for a column the store lacks and TypeError/ValueError
+    for a value that does not fit the column type, before any job runs."""
+    out = []
+    for col, op, value in filters or ():
+        if col not in types:
+            raise KeyError(f"columns not present in encoded data: [{col!r}]")
+        t = types[col]
+        zone = _zone_intervals(t, op, value)
+        dict_probe = None
+        if t in _STRINGY and op in ("==", "in", "prefix", "contains",
+                                    "suffix"):
+            dict_probe = (*_dict_probes(value, prefix=op == "prefix",
+                                        contains=op == "contains",
+                                        suffix=op == "suffix"), None)
+        elif op == "rlike" and _rlike_prunable(value) is not None:
+            dict_probe = ({}, None, None, None, value)
+        bloom = _bloom_hashes(t, value) if op in ("==", "in") else None
+        out.append(_Pruner(col, zone, dict_probe, bloom))
+    return out
 
 
-def pruned_chunks_any(spark, out_dir: str, columns: list[str] | None,
-                      filters: list[tuple[str, str, int | str]],
-                      dict_prune: bool = True) -> DataFrame:
-    """Chunk rows for ``columns``, minus every chunk that NO branch of the
-    disjunction ``filters`` can match — the OR complement of
-    ``pruned_chunks``. A chunk survives if any single branch's full
-    pruning stack (zones, dict sections, blooms) keeps it, so the
-    surviving set is exactly the union of the per-branch keep-sets; each
-    branch reuses the conjunctive pruner with itself as the only filter
-    (metadata-only scans, one per branch — OR fan-out is small in
-    practice)."""
-    chunks = _chunks_df(spark, out_dir, columns)
+def _split_key(k) -> tuple[int, int]:
+    """``(pid, chunk_id)`` of a ``pid << 32 | chunk_id`` chunk key."""
+    return int(k) >> 32, int(k) & 0xFFFFFFFF
+
+
+class _ChunkFile:
+    """One chunk file opened for a pruned read: footer plus the narrow
+    ``_META_COLS`` projection, chunks keyed and ordered by
+    (pid, chunk_id)."""
+
+    def __init__(self, path: str):
+        import pyarrow.parquet as pq
+
+        self.pf = pq.ParquetFile(path)
+        self.names = set(self.pf.schema_arrow.names)
+        self.meta = self.pf.read(
+            columns=[c for c in _META_COLS if c in self.names])
+        key = ((self.meta.column("pid").to_numpy().astype(np.int64) << 32)
+               | self.meta.column("chunk_id").to_numpy().astype(np.int64))
+        self.keys, self.inv = np.unique(key, return_inverse=True)
+        self.n_rows = np.zeros(len(self.keys), dtype=np.int64)
+        self.n_rows[self.inv] = self.meta.column("n_rows").to_numpy()
+        self.columns = self.meta.column("column").to_pylist()
+        self.codecs = self.meta.column("codec").to_pylist()
+        self._blooms = self._body = None
+
+    def _rows(self, col: str) -> np.ndarray:
+        return np.flatnonzero(
+            pc.equal(self.meta.column("column"), col)
+            .to_numpy(zero_copy_only=False))
+
+    def body(self) -> "tuple[pa.ChunkedArray, pa.ChunkedArray]":
+        """(params, payload) of every row, read once."""
+        if self._body is None:
+            t = self.pf.read(columns=["params", "payload"])
+            self._body = t.column("params"), t.column("payload")
+        return self._body
+
+    def _zone_keep(self, f: _Pruner) -> np.ndarray:
+        keep = np.ones(len(self.keys), dtype=bool)
+        if f.zone is None or "zmin_long" not in self.names:
+            return keep  # no zone information / pre-zone-map store
+        zmin, zmax = (self.meta.column(c) for c in ("zmin_long", "zmax_long"))
+        r = self._rows(f.col)
+        # null zones (all-null chunks) are always kept
+        r = r[pc.and_(pc.is_valid(zmin), pc.is_valid(zmax))
+              .to_numpy(zero_copy_only=False)[r]]
+        lo = zmin.fill_null(0).to_numpy()[r]
+        hi = zmax.fill_null(0).to_numpy()[r]
+        los, his = f.zone
+        if not len(los):
+            keep[self.inv[r]] = False
+            return keep
+        # the zone [lo, hi] meets an interval iff the last interval
+        # starting at or below hi ends at or above lo
+        j = np.searchsorted(los, hi, side="right")
+        keep[self.inv[r]] = (j > 0) & (his[np.maximum(j - 1, 0)] >= lo)
+        return keep
+
+    def _dict_keep(self, f: _Pruner, alive: np.ndarray) -> np.ndarray:
+        """Drop live chunks whose str_dict dictionary holds no probed
+        value; decodes only their dictionary sections."""
+        keep = np.ones(len(self.keys), dtype=bool)
+        if f.dict_probe is None:
+            return keep
+        r = [i for i in self._rows(f.col)
+             if alive[self.inv[i]] and self.codecs[i] == "str_dict"]
+        if not r:
+            return keep
+        by_len, pfx, sub, sfx, pattern = f.dict_probe
+        rx = None if pattern is None else re.compile(pattern, re.ASCII)
+        params, payload = self.body()
+        for i in r:
+            if not dict_payload_has_value(
+                    json.loads(params[i].as_py()), payload[i].as_py(),
+                    by_len, pfx, sub, sfx, rx=rx):
+                keep[self.inv[i]] = False
+        return keep
+
+    def _bloom_keep(self, f: _Pruner, alive: np.ndarray) -> np.ndarray:
+        """Drop live chunks whose Bloom filter proves every probed value
+        absent; chunks without a bloom are kept."""
+        from ..kernel.bloom import bloom_might_contain_hashes
+
+        keep = np.ones(len(self.keys), dtype=bool)
+        if f.bloom is None or "bloom" not in self.names:
+            return keep
+        r = self._rows(f.col)
+        r = r[alive[self.inv[r]]]
+        if not len(r):
+            return keep
+        if self._blooms is None:
+            self._blooms = self.pf.read(columns=["bloom"]).column("bloom")
+        for i in r:
+            blob = self._blooms[i].as_py()
+            if blob is not None and not bloom_might_contain_hashes(blob, f.bloom):
+                keep[self.inv[i]] = False
+        return keep
+
+    def prune(self, filters: list[_Pruner], any_filters: list[_Pruner] = (),
+              keys: "np.ndarray | None" = None) -> "tuple[np.ndarray, np.ndarray]":
+        """``(after_zones, kept)`` chunk masks for ``AND(filters) AND
+        OR(any_filters)``, restricted to ``keys`` (sorted
+        ``pid << 32 | chunk_id``) when given. ``after_zones`` applies every
+        filter's zone test; ``kept`` adds the dictionary and bloom arms,
+        which only test chunks still alive. An OR clause keeps the union
+        of its branches' keep-sets."""
+        alive = (np.ones(len(self.keys), dtype=bool) if keys is None
+                 else np.isin(self.keys, keys))
+        for f in filters:
+            alive &= self._zone_keep(f)
+        branches = [alive & self._zone_keep(b) for b in any_filters]
+        if branches:
+            alive = np.logical_or.reduce(branches)
+        after_zones = alive.copy()
+        for f in filters:
+            alive &= self._dict_keep(f, alive)
+            alive &= self._bloom_keep(f, alive)
+        if branches:
+            hit = np.zeros_like(alive)
+            for b, live in zip(any_filters, branches):
+                live = live & alive
+                live &= self._dict_keep(b, live)
+                live &= self._bloom_keep(b, live)
+                hit |= live
+            alive = hit
+        return after_zones, alive
+
+    def chunks(self, alive: np.ndarray, columns: list[str]) -> Iterator:
+        """``((pid, chunk_id), n_rows, {column: enc})`` per live chunk, in
+        chunk order, carrying the encoded rows of ``columns`` the chunk
+        has (a chunk that predates a schema-log ADD COLUMN lacks it)."""
+        live = np.flatnonzero(alive)
+        if not len(live):
+            return
+        want = set(columns)
+        rows: dict[int, list[int]] = {}
+        for i in np.flatnonzero(alive[self.inv]):
+            if self.columns[i] in want:
+                rows.setdefault(int(self.inv[i]), []).append(int(i))
+        params, payload = self.body() if rows else (None, None)
+        for ci in live:
+            yield (_split_key(self.keys[ci]), int(self.n_rows[ci]), {
+                self.columns[i]: {"codec": self.codecs[i],
+                                  "params": json.loads(params[i].as_py()),
+                                  "payload": payload[i].as_py()}
+                for i in rows.get(int(ci), ())})
+
+
+def _file_survivors(path: str, filters: list[tuple],
+                    col_types: dict[str, str]) -> "set[tuple[int, int]] | None":
+    """(pid, chunk_id) keys of one chunk file that survive the pruner for
+    the conjunction ``filters``, or None when there are no filters."""
     if not filters:
-        return chunks
-    keep = None
-    for zf in filters:
-        k = pruned_chunks(spark, out_dir, columns, [zf], dict_prune) \
-            .select("pid", "chunk_id")
-        keep = k if keep is None else keep.unionByName(k)
-    return chunks.join(keep.distinct(), ["pid", "chunk_id"], "left_semi")
+        return None
+    f = _ChunkFile(path)
+    _, kept = f.prune(compile_filters(filters, col_types))
+    return {_split_key(k) for k in f.keys[kept]}
 
 
-def chunk_repartition(spark, chunks: DataFrame, out_dir: str,
-                      ordered: bool = False) -> DataFrame:
-    """Shuffle chunk rows so all column rows of one chunk land in one task.
+def chunk_files(out_dir: str, pids=None) -> list[str]:
+    """The store's ``chunks/part-{pid:05d}.parquet`` files in pid order —
+    parsed from the name, since a lexical sort puts ``part-100000``
+    before ``part-99999`` — optionally only those of ``pids``."""
+    import glob
+    import os
+
+    found = []
+    for path in glob.glob(os.path.join(out_dir, "chunks", "part-*.parquet")):
+        stem = os.path.basename(path)[len("part-"):-len(".parquet")]
+        if stem.isdigit():
+            found.append((int(stem), path))
+    if pids is not None:
+        want = set(pids)
+        found = [f for f in found if f[0] in want]
+    return [path for _, path in sorted(found)]
+
+
+def _task_paths(batches: Iterator[pa.RecordBatch], files: list[str]) -> Iterator[str]:
+    """The file paths of one ``file_task_df`` task."""
+    for batch in batches:
+        for i in batch.column("id").to_pylist():
+            yield files[i]
+
+
+def scan_chunks(spark, out_dir: str, columns: list[str], task, ddl: str,
+                filters: list[tuple] | None = None,
+                any_filters: list[tuple] | None = None,
+                pids=None, chunk_keys=None,
+                types: dict[str, str] | None = None) -> DataFrame:
+    """The one chunk-payload reader: ``task(chunks)`` runs once per chunk
+    file (``mapInArrow`` over ``file_task_df``, no shuffle) and consumes
+    that file's surviving chunks as ``((pid, chunk_id), n_rows,
+    {column: enc})`` in chunk order, the encoded rows of ``columns``
+    attached. Surviving = the pruner keeps it for ``AND(filters) AND
+    OR(any_filters)``, its pid is in ``pids`` and its key in
+    ``chunk_keys`` (both optional; they also drop whole files on the
+    driver). Task i reads the i-th file in pid order, so output comes in
+    (pid, chunk_id, row) order."""
+    from .encode import file_task_df
+
+    if types is None:
+        types = column_arrow_types(spark, out_dir, include_added=True)
+    flt = compile_filters(filters, types)
+    any_flt = compile_filters(any_filters, types)
+    keys = None
+    if chunk_keys is not None:
+        keys = np.unique(np.array(
+            [(int(p) << 32) | int(c) for p, c in chunk_keys], dtype=np.int64))
+        key_pids = {int(p) for p, _ in chunk_keys}
+        pids = key_pids if pids is None else key_pids & set(pids)
+    files = chunk_files(out_dir, pids)
+    cols = list(columns)
+
+    def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from ..env import madvise_hugepages
+
+        madvise_hugepages()
+
+        def chunks():
+            for path in _task_paths(batches, files):
+                f = _ChunkFile(path)
+                yield from f.chunks(f.prune(flt, any_flt, keys)[1], cols)
+
+        yield from task(chunks())
+
+    return file_task_df(spark, len(files)).mapInArrow(read_files, ddl)
+
+
+def chunk_survivors(spark, out_dir: str, columns: list[str],
+                    filters: list[tuple] | None = None,
+                    any_filters: list[tuple] | None = None,
+                    pids=None, types: dict[str, str] | None = None) -> DataFrame:
+    """``(pid, chunk_id, n_rows, enc_bytes, after_zones, kept)`` for every
+    chunk that carries a row of ``columns`` (``enc_bytes`` sums those
+    rows): one pruner run per file, no payload read beyond dictionary
+    sections — the metadata side of :func:`decode_plan` and
+    :func:`decode_head`."""
+    from .encode import file_task_df
+
+    if types is None:
+        types = column_arrow_types(spark, out_dir, include_added=True)
+    flt = compile_filters(filters, types)
+    any_flt = compile_filters(any_filters, types)
+    files = chunk_files(out_dir, pids)
+    cols = pa.array(list(columns), pa.string())
+
+    def prune_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for path in _task_paths(batches, files):
+            f = _ChunkFile(path)
+            after_zones, kept = f.prune(flt, any_flt)
+            sel = np.flatnonzero(pc.is_in(f.meta.column("column"), cols)
+                                 .to_numpy(zero_copy_only=False))
+            has = np.zeros(len(f.keys), dtype=bool)
+            has[f.inv[sel]] = True
+            enc = np.zeros(len(f.keys), dtype=np.int64)
+            np.add.at(enc, f.inv[sel], f.meta.column("enc_bytes").to_numpy()[sel])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array((f.keys[has] >> 32).astype(np.int32)),
+                 pa.array((f.keys[has] & 0xFFFFFFFF).astype(np.int32)),
+                 pa.array(f.n_rows[has]), pa.array(enc[has]),
+                 pa.array(after_zones[has]), pa.array(kept[has])],
+                names=["pid", "chunk_id", "n_rows", "enc_bytes",
+                       "after_zones", "kept"])
+
+    return file_task_df(spark, len(files)).mapInArrow(
+        prune_files, "pid int, chunk_id int, n_rows bigint, enc_bytes bigint, "
+        "after_zones boolean, kept boolean")
+
+
+def chunk_repartition(spark, chunks: DataFrame, out_dir: str) -> DataFrame:
+    """Shuffle chunk rows so all column rows of one chunk land in one task
+    — for the metadata tri-state paths (``agg.encoded_count_filtered``,
+    the unfiltered ``agg.encoded_histogram``), which classify chunks in a
+    JVM metadata scan and decode only the boundary chunks' rows.
 
     Chunk rows are few and fat (payload ~MBs), so the shuffle moves encoded
-    (small) bytes — decoding after the shuffle keeps shuffled volume
-    minimal. Partition count tracks the store size (one manifest file per
-    encode partition — a driver-side listing, no data read): a small encode
-    gets a few real tasks instead of defaultParallelism near-empty ones, a
-    big store still fans out to full parallelism.
-
-    ``ordered=True`` swaps the hash shuffle for a RANGE partition on
-    (pid, chunk_id) plus an in-partition sort of the (few, fat) chunk
-    rows: task i then holds chunks strictly before task i+1's, each task
-    decodes its chunks in order, and the decoded output is globally
-    ordered by (pid, chunk_id, row) WITHOUT any row-level sort — on a
-    store clustered by ``sort_key`` that IS key order, so a sorted
-    100 TB export costs the same chunk-metadata shuffle as a plain
-    decode."""
+    (small) bytes. Partition count tracks the store size (one manifest file
+    per encode partition — a driver-side listing, no data read): a small
+    encode gets a few real tasks instead of defaultParallelism near-empty
+    ones, a big store still fans out to full parallelism."""
     import glob as _glob
     import os as _os
 
     n_pids = len(_glob.glob(_os.path.join(out_dir, "manifest", "*.parquet")))
     n_part = min(spark.sparkContext.defaultParallelism * 2,
                  max(1, n_pids * 4)) if n_pids else None
-    if ordered:
-        rng = (chunks.repartitionByRange(n_part, "pid", "chunk_id")
-               if n_part else
-               chunks.repartitionByRange("pid", "chunk_id"))
-        return rng.sortWithinPartitions("pid", "chunk_id")
     if n_part:
         return chunks.repartition(n_part, F.col("pid"), F.col("chunk_id"))
-    # non-globbable store: keep the default-parallelism shuffle
     return chunks.repartition(F.col("pid"), F.col("chunk_id"))
 
 
@@ -722,186 +832,62 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
                zone_filter: tuple[str, str, int | str] | None = None,
                zone_filters: list[tuple[str, str, int | str]] | None = None,
                zone_filters_any: list[tuple[str, str, int | str]] | None = None,
-               dict_prune: bool = True,
                as_of: int | None = None,
-               ordered: bool = False,
                _pids: list[int] | None = None,
                _chunk_keys: list[tuple[int, int]] | None = None) -> DataFrame:
     """DataFrame of the decoded table (plus pid/chunk_id provenance cols).
 
+    One task per chunk file (:func:`scan_chunks`): the task prunes its
+    file, decodes the surviving chunks and emits them in chunk order, so
+    rows come out globally ordered by (pid, chunk_id, row position) with
+    no shuffle and no sort — on a store clustered with
+    ``encode_job(sort_key=K)`` that is K-order.
+
     ``zone_filter=(col, op, value)`` — or a conjunction via
     ``zone_filters=[(col, op, value), ...]`` (all must hold) — prunes whole
-    chunks via the encode-time zone maps BEFORE any payload is read or
-    decoded — chunk-granular, so the result still contains non-matching
-    rows from surviving chunks; apply the exact row predicate afterwards
-    (``decode_filtered`` does both). ``zone_filters_any`` instead prunes
-    for a DISJUNCTION (any branch may hold; composable with the
-    conjunctive filters — both prunings apply). String equality filters
-    additionally prune via the dict codec's dictionary (``dict_prune``):
-    chunks whose dictionary lacks the value are skipped without decoding
-    any payload beyond the dictionary itself.
+    chunks BEFORE any payload is read or decoded: zone maps first, then
+    ``str_dict`` dictionaries (only the dictionary section decodes) and
+    per-chunk Bloom filters for ``==``/``in``. Pruning is chunk-granular,
+    so the result still contains non-matching rows from surviving chunks;
+    apply the exact row predicate afterwards (``decode_filtered`` does
+    both). ``zone_filters_any`` prunes for a DISJUNCTION (a chunk survives
+    if any branch keeps it; composable with the conjunctive filters).
 
-    ``as_of=N`` time-travels: only chunks committed by log entries 0..N
-    decode (a pid filter pushed into the metadata scan — commit entries
-    are immutable, so the same N always yields the same rows).
-
-    ``ordered=True`` returns the rows globally ordered by
-    (pid, chunk_id, row position) — partition i strictly precedes
-    partition i+1 and rows within a partition are in chunk order — via a
-    RANGE partition of the chunk metadata, never a row-level sort (see
-    :func:`chunk_repartition`). On a store clustered with
-    ``encode_job(sort_key=K)`` this is K-order: a sorted export for the
-    price of a plain decode. Caveat: a store with UNMATERIALIZED
-    schema-log-added columns buffers its pre-add chunks to end-of-stream,
-    which breaks in-partition chunk order — materialize first."""
+    ``as_of=N`` time-travels: only chunk files committed by log entries
+    0..N are read (commit entries are immutable, so the same N always
+    yields the same rows). Columns added through the schema log read as
+    NULL in chunks written before the add."""
     ddl, out_cols = decoded_schema_ddl(spark, out_dir, columns)
     filters = list(zone_filters or [])
     if zone_filter is not None:
         filters.append(zone_filter)
-    scan_columns = columns
-    if columns is not None:
-        # decoding ONLY schema-log-added columns: no physical rows would be
-        # scanned at all, so the task couldn't learn chunk row counts —
-        # pull one physical column through the scan as a row-count carrier
-        # (dropped before emit; its decode is the price of the corner)
-        from .schema import added_columns as _added
-
-        if set(out_cols) <= set(_added(out_dir)):
-            # carrier must exist in EVERY chunk: a materialized added
-            # column is physical in new files but absent from pre-add
-            # chunks, so exclude everything in the added log
-            phys = sorted(set(column_arrow_types(spark, out_dir))
-                          - set(_added(out_dir)))
-            if phys:
-                scan_columns = list(columns) + [phys[0]]
+    if as_of is not None and _pids is not None:
+        raise ValueError("pass as_of OR a pid whitelist, not both")
+    pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids
     # row tombstones (jobs.deletes) apply executor-side: the flag is read
     # once on the driver, each task lazily loads its pids' positions
     from .deletes import has_deletes
-    from .schema import added_columns, dropped_columns
+    from .schema import added_columns
 
     deletes_on = has_deletes(out_dir)
-    # schema-log-added columns: chunks written before the add have no row
-    # for them — they fill with NULLs at end-of-stream. Chunks written
-    # after the add carry the column physically and keep the streaming
-    # early-emit; a store with UNMATERIALIZED adds buffers its pre-add
-    # chunks per task until the task's input ends (memory ∝ the task's own
-    # input share — rewrite via recluster/materialize to restore
-    # chunk-at-a-time emit everywhere).
-    added_types = {c: t for c, t in added_columns(out_dir).items()
-                   if c in out_cols}
+    added = added_columns(out_dir)
 
-    def decode_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..env import madvise_hugepages
+    def decode_chunks(chunks) -> Iterator[pa.RecordBatch]:
         from ..kernel.codecs import parse_arrow_type
         from .deletes import DeleteMask
 
-        madvise_hugepages()
         dmask = DeleteMask(out_dir) if deletes_on else None
-        pending: dict[tuple[int, int], dict] = {}
-        for batch in batches:
-            cols = batch.to_pylist()
-            for row in cols:
-                key = (row["pid"], row["chunk_id"])
-                slot = pending.setdefault(key, {"cols": {}})
-                slot["cols"][row["column"]] = decode_column(
-                    {"codec": row["codec"], "params": json.loads(row["params"]),
-                     "payload": row["payload"]}
-                )
-                # membership, not count: the row-count-carrier column of the
-                # all-added corner is scanned but not in `out_cols`
-                if all(c in slot["cols"] for c in out_cols):
-                    out = _emit(key, slot["cols"], out_cols, dmask)
-                    if out is not None:
-                        yield out
-                    del pending[key]
-        for key in sorted(pending):  # pre-add chunks: fill virtual NULLs
-            cols = pending[key]["cols"]
-            missing = set(out_cols) - set(cols)
-            assert missing and missing <= set(added_types), \
-                f"incomplete chunk {key}: missing non-added columns {missing}"
-            n = len(next(iter(cols.values())))
-            for c in missing:
-                cols[c] = pa.nulls(n, parse_arrow_type(added_types[c]))
+        for key, n, enc in chunks:
+            cols = {c: decode_column(e) for c, e in enc.items()}
+            for c in out_cols:
+                if c not in cols:  # chunk predates the column's schema-log add
+                    cols[c] = pa.nulls(n, parse_arrow_type(added[c]))
             out = _emit(key, cols, out_cols, dmask)
             if out is not None:
                 yield out
 
-    if (not filters and not zone_filters_any and as_of is None
-            and _pids is None and _chunk_keys is None and not ordered):
-        # FILE-GRANULAR fast path (the decode mirror of the encode-side
-        # reroute): an unfiltered decode needs no chunk pruning and no
-        # grouping shuffle — every (pid, chunk_id) group already lives
-        # whole inside its pid's single chunk file, so one task per file
-        # reads it columnar-natively with pyarrow. This removes BOTH the
-        # payload shuffle (encoded bytes never cross an Exchange) and the
-        # JVM->Python hop of the chunk-metadata scan (only file paths
-        # cross), and reads just the six columns the decode needs —
-        # zones/bloom/hll/checksum bytes stay on disk.
-        import glob as _glob
-        import os as _os
-
-        files = sorted(_glob.glob(_os.path.join(out_dir, "chunks",
-                                                "*.parquet")))
-        if files:
-            if scan_columns is not None:
-                col_keep, col_drop = list(scan_columns), None
-            else:
-                col_keep = None
-                col_drop = sorted(dropped_columns(out_dir)) or None
-            from .encode import file_task_df
-
-            task_df = file_task_df(spark, list(enumerate(files)),
-                                   "i int, path string")
-
-            def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-                import pyarrow.compute as _pc
-                import pyarrow.parquet as _pq
-
-                def file_batches():
-                    for batch in batches:
-                        for path in batch.column("path").to_pylist():
-                            t = _pq.read_table(
-                                path, columns=["pid", "chunk_id", "column",
-                                               "codec", "params", "payload"])
-                            if col_keep is not None:
-                                t = t.filter(_pc.is_in(
-                                    t.column("column"),
-                                    pa.array(col_keep, pa.string())))
-                            elif col_drop is not None:
-                                t = t.filter(_pc.invert(_pc.is_in(
-                                    t.column("column"),
-                                    pa.array(col_drop, pa.string()))))
-                            yield from t.to_batches()
-
-                yield from decode_task(file_batches())
-
-            return task_df.mapInArrow(read_files, ddl)
-
-    chunks = pruned_chunks(spark, out_dir, scan_columns, filters, dict_prune)
-    if as_of is not None and _pids is not None:
-        raise ValueError("pass as_of OR a pid whitelist, not both")
-    pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids
-    if pids is not None:
-        if not pids:  # valid empty commit range: no chunks visible
-            chunks = chunks.where(F.lit(False))
-        elif len(pids) <= 100_000:
-            chunks = chunks.where(F.col("pid").isin(pids))
-        else:  # snapshot spans many writes: semi join beats a giant IN plan
-            pdf = spark.createDataFrame([(p,) for p in pids], "pid int")
-            chunks = chunks.join(F.broadcast(pdf), "pid", "left_semi")
-    if _chunk_keys is not None:  # LIMIT pushdown: exactly these chunks
-        kdf = spark.createDataFrame(_chunk_keys, "pid int, chunk_id int")
-        chunks = chunks.join(F.broadcast(kdf), ["pid", "chunk_id"],
-                             "left_semi")
-    if zone_filters_any:
-        any_keep = pruned_chunks_any(spark, out_dir, columns,
-                                     list(zone_filters_any), dict_prune) \
-            .select("pid", "chunk_id").distinct()
-        chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-    # sketches served their purpose at pruning time; don't shuffle them
-    chunks = chunk_repartition(spark, chunks.drop("bloom", "hll"), out_dir,
-                               ordered=ordered)
-    return chunks.mapInArrow(decode_task, ddl)
+    return scan_chunks(spark, out_dir, out_cols, decode_chunks, ddl,
+                       filters, zone_filters_any, pids, _chunk_keys)
 
 
 def _row_predicate(col: str, op: str, value, arrow_name: str):
@@ -954,6 +940,15 @@ def _row_predicate(col: str, op: str, value, arrow_name: str):
     }[op]
 
 
+def _with_filter_cols(columns: list[str] | None,
+                      fcols: list[str]) -> list[str] | None:
+    """``columns`` widened by the filter columns the row predicates need,
+    each column once (None stays None: every column is read anyway)."""
+    if columns is None:
+        return None
+    return list(dict.fromkeys([*columns, *fcols]))
+
+
 def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None = None,
                     value: int | str | float | None = None,
                     columns: list[str] | None = None,
@@ -981,9 +976,7 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
         raise ValueError("decode_filtered needs (col, op, value), "
                          "filters=[...], or any_filters=[...]")
     fcols = [f[0] for f in flt + any_flt]
-    cols = columns
-    if cols is not None:
-        cols = cols + [c for c in fcols if c not in cols]
+    cols = _with_filter_cols(columns, fcols)
     types = column_arrow_types(spark, out_dir, include_added=True)
     for fc in fcols:
         if fc in types and types[fc].startswith(
@@ -1015,9 +1008,9 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
                 as_of: int | None = None) -> dict:
     """EXPLAIN for a selective decode — what :func:`decode_filtered` WOULD
     read, from metadata alone (zone/dict/bloom pruning runs for real; no
-    payload chunk is ever decoded). The dry-run costs one narrow metadata
-    scan per pruning stage, so planning a query against a 100 TB store is
-    an interactive operation — the ops surface for "is my store clustered
+    payload chunk is ever decoded). The dry-run is one run of the decode's
+    own per-file pruner without the payload read, so planning a query
+    against a 100 TB store is an interactive operation — the ops surface for "is my store clustered
     for this predicate?" before committing a cluster-hours decode, and the
     decode sibling of ``store_join_plan``.
 
@@ -1046,52 +1039,24 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
     for c in list(columns or []) + [f[0] for f in flt + any_flt]:
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
-    scan_cols = columns
-    if scan_cols is not None:
-        fcols = [f[0] for f in flt + any_flt]
-        scan_cols = list(scan_cols) + [c for c in fcols
-                                       if c not in scan_cols]
-
+    scan_cols = _with_filter_cols(columns, [f[0] for f in flt + any_flt])
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else None
+    # one pruner run per file answers every count: the totals, the
+    # zones-only survivors and the full stack's survivors
+    surv = chunk_survivors(spark, out_dir, scan_cols or sorted(types), flt,
+                           any_flt, pids, types)
 
-    def _restrict(chunks: DataFrame) -> DataFrame:
-        if pids is None:
-            return chunks
-        if not pids:
-            return chunks.where(F.lit(False))
-        return chunks.where(F.col("pid").isin(pids))
+    def kept(flag: str, col=F.lit(1)):
+        return F.sum(F.when(F.col(flag), col).otherwise(0))
 
-    def _measure(chunks: DataFrame) -> tuple[int, int, int]:
-        """(n_chunks, n_rows, enc_bytes) — chunk count and row total are
-        per (pid, chunk_id) [every column of a chunk shares n_rows]; bytes
-        sum over all selected column rows (what the decode reads)."""
-        r = _restrict(chunks).agg(
-            F.count_distinct("pid", "chunk_id").alias("c"),
-            F.sum("enc_bytes").alias("b"),
-        ).collect()[0]
-        rows = (_restrict(chunks)
-                .select("pid", "chunk_id", "n_rows").distinct()
-                .agg(F.sum("n_rows")).collect()[0][0])
-        return int(r["c"] or 0), int(rows or 0), int(r["b"] or 0)
-
-    total_c, total_r, total_b = _measure(
-        _chunks_df(spark, out_dir, scan_cols))
-
-    def _keep(dict_prune: bool) -> DataFrame:
-        chunks = pruned_chunks(spark, out_dir, scan_cols, flt, dict_prune)
-        if any_flt:
-            any_keep = (pruned_chunks_any(spark, out_dir, scan_cols,
-                                          any_flt, dict_prune)
-                        .select("pid", "chunk_id").distinct())
-            chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-        return chunks
-
-    if flt or any_flt:
-        zone_c, _, _ = _measure(_keep(dict_prune=False))
-        kept_c, kept_r, kept_b = _measure(_keep(dict_prune=True))
-    else:
-        zone_c, (kept_c, kept_r, kept_b) = total_c, (total_c, total_r,
-                                                     total_b)
+    r = surv.agg(
+        F.count("*").alias("total_c"), F.sum("n_rows").alias("total_r"),
+        F.sum("enc_bytes").alias("total_b"),
+        kept("after_zones").alias("zone_c"), kept("kept").alias("kept_c"),
+        kept("kept", F.col("n_rows")).alias("kept_r"),
+        kept("kept", F.col("enc_bytes")).alias("kept_b")).collect()[0]
+    total_c, total_r, total_b, zone_c, kept_c, kept_r, kept_b = (
+        int(v or 0) for v in r)
     from .deletes import has_deletes
 
     return {
@@ -1168,7 +1133,8 @@ def decode_head(spark, out_dir: str, n: int,
     (zone/dict/bloom-pruned when ``filters`` are given) in (pid, chunk_id)
     order, taking the shortest prefix whose summed ``n_rows`` covers the
     limit. Without filters or tombstones the metadata counts are exact and
-    ONE selection suffices. With row predicates (or tombstones) surviving
+    ONE selection suffices, read on the driver from the narrow metadata
+    of the first chunk files in pid order. With row predicates (or tombstones) surviving
     chunks may yield fewer rows than their counts, so the prefix doubles
     until the limit is met or every surviving chunk is read — each retry
     costs one count() over a chunk set that is still bounded by ~2× what
@@ -1176,36 +1142,18 @@ def decode_head(spark, out_dir: str, n: int,
     is conservative; the row predicates re-apply), so the returned rows
     always satisfy them.
 
-    At 10^12 docs: the selection reads only the narrow
-    (pid, chunk_id, n_rows) metadata projection with a sort-limit (never
-    payload, never a full collect), and the decode plan is the normal
-    selective-decode plan over the selected chunk whitelist."""
+    At 10^12 docs: a filtered selection is one pruner run per chunk file
+    (metadata columns and dictionary sections, never other payload)
+    under a sort-limit, and the decode reads only the files holding the
+    selected chunks."""
     if n <= 0:
         raise ValueError(f"decode_head needs n > 0 (got {n})")
     flt = list(filters or [])
     fcols = [f[0] for f in flt]
-    cols = columns
-    if cols is not None:
-        cols = cols + [c for c in fcols if c not in cols]
-    ddl, ordered = decoded_schema_ddl(spark, out_dir, cols)
+    cols = _with_filter_cols(columns, fcols)
     from .deletes import has_deletes
 
-    exact = not flt and not has_deletes(out_dir)
     types = column_arrow_types(spark, out_dir, include_added=True)
-    from .schema import added_columns as _added_cols
-
-    # the n_rows carrier must exist in EVERY chunk: exclude all added-log
-    # columns (a materialized add is physical in new files only)
-    phys = sorted(set(column_arrow_types(spark, out_dir))
-                  - set(_added_cols(out_dir)))
-    meta_col = next((c for c in ordered if c in phys), phys[0])
-    scan_cols = (cols if cols is None or meta_col in cols
-                 else cols + [meta_col])
-    src = (pruned_chunks(spark, out_dir, scan_cols, flt) if flt
-           else _chunks_df(spark, out_dir, scan_cols))
-    meta = (src.where(F.col("column") == meta_col)
-            .select("pid", "chunk_id", "n_rows")
-            .orderBy("pid", "chunk_id"))
 
     def build(keys):
         df = decode_job(spark, out_dir, cols, _chunk_keys=keys)
@@ -1213,24 +1161,29 @@ def decode_head(spark, out_dir: str, n: int,
             df = df.where(_row_predicate(fc, fop, fval, types[fc]))
         if columns is not None:
             df = df.drop(*[c for c in fcols if c not in columns])
-        return df
+        return df.limit(n)
 
+    if not flt and not has_deletes(out_dir):
+        # exact metadata counts: the prefix is read off the narrow
+        # metadata of the first files in pid order, on the driver
+        keys, got = [], 0
+        for path in chunk_files(out_dir):
+            f = _ChunkFile(path)
+            for k, rows in zip(f.keys, f.n_rows):
+                keys.append(_split_key(k))
+                got += int(rows)
+                if got >= n:
+                    return build(keys)
+        return build(keys)
+    meta = (chunk_survivors(spark, out_dir, sorted(types), flt, types=types)
+            .where("kept").select("pid", "chunk_id", "n_rows")
+            .orderBy("pid", "chunk_id"))
     k = 1
     while True:
         rows = meta.limit(k).collect()
-        got = 0
-        keys = []
-        for r in rows:
-            keys.append((r["pid"], r["chunk_id"]))
-            got += r["n_rows"]
-            if exact and got >= n:
-                break
-        df = build(keys)
-        if exact and got >= n:
-            return df.limit(n)
-        exhausted = len(rows) < k
-        if exhausted or df.limit(n).count() >= n:
-            return df.limit(n)
+        df = build([(r["pid"], r["chunk_id"]) for r in rows])
+        if len(rows) < k or df.count() >= n:
+            return df
         k *= 2
 
 
@@ -1388,9 +1341,7 @@ def decode_semijoin(spark, out_dir: str, col: str, keys,
     # keys — metadata-scale by construction, and the cap keeps a
     # billion-key build side from ever landing on the driver
     head = [r["_k"] for r in keys_df.limit(max_pushdown_keys + 1).collect()]
-    cols = columns
-    if cols is not None and col not in cols:
-        cols = cols + [col]
+    cols = _with_filter_cols(columns, [col])
     if not head:  # empty build side: nothing can match, decode nothing
         df = decode_job(spark, out_dir, cols).limit(0)
     elif len(head) <= max_pushdown_keys:

@@ -143,8 +143,9 @@ def delete_where(spark, store: str, col: str | None = None,
     conjunction via ``filters``, a disjunction via ``any_filters`` —
     combined as ``AND(filters) AND OR(any_filters)``.
 
-    Plan: zone/dict/bloom pruning -> decode ONLY the predicate columns of
-    surviving chunks -> exact chunk-local row mask (minus already-
+    Plan: the pruned chunk-file reader (zone/dict/bloom pruning, one task
+    per chunk file) -> decode ONLY the predicate columns of surviving
+    chunks -> exact chunk-local row mask (minus already-
     tombstoned positions, so repeated deletes are idempotent and counts
     stay exact) -> distributed append of (pid, chunk_id, pos) rows sorted
     by chunk key (read-side pid filters then prune row groups). A JSON
@@ -153,12 +154,7 @@ def delete_where(spark, store: str, col: str | None = None,
     ``update_where`` uses it to tombstone only pre-append writes."""
     from ..kernel.codecs import decode_column
     from .agg import _arrow_mask, _conj_mask
-    from .decode import (
-        chunk_repartition,
-        column_arrow_types,
-        pruned_chunks,
-        pruned_chunks_any,
-    )
+    from .decode import column_arrow_types, scan_chunks
 
     flt = list(filters or [])
     if col is not None:
@@ -175,74 +171,37 @@ def delete_where(spark, store: str, col: str | None = None,
         if f[0] not in fcols:
             fcols.append(f[0])
 
-    chunks = pruned_chunks(spark, store, fcols, flt, dict_prune=True)
-    if pids is not None:
-        if len(pids) <= 100_000:
-            chunks = chunks.where(chunks["pid"].isin(sorted(pids)))
-        else:
-            from pyspark.sql import functions as F
-
-            pdf = spark.createDataFrame([(p,) for p in sorted(pids)], "pid int")
-            chunks = chunks.join(F.broadcast(pdf), "pid", "left_semi")
-    if any_flt:
-        any_keep = pruned_chunks_any(spark, store, fcols, list(any_flt),
-                                     dict_prune=True) \
-            .select("pid", "chunk_id").distinct()
-        chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), store)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def task(chunks) -> Iterator[pa.RecordBatch]:
         mask_cache = DeleteMask(store)
-        # assemble per-chunk predicate columns WITH their keys: inline the
-        # grouping loop (agg._assembled_chunks hides the (pid, chunk_id)
-        # key, which the tombstone rows need)
-        pending: dict[tuple[int, int], dict[str, dict]] = {}
-        for batch in batches:
-            for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("column"), batch.column("codec"),
-                    batch.column("params"), batch.column("payload")):
-                key = (pid_s.as_py(), cid_s.as_py())
-                cols = pending.setdefault(key, {})
-                cols[col_s.as_py()] = {
-                    "codec": codec_s.as_py(),
-                    "params": json.loads(params_s.as_py()),
-                    "payload": payload_s.as_py(),
-                }
-                if len(cols) != len(fcols):
-                    continue
-                del pending[key]
-                decoded: dict[str, pa.Array] = {}
-                mask = _conj_mask(cols, flt, types, decoded)
-                if any_flt:
-                    amask: np.ndarray | None = None
-                    for fc, fop, fval in any_flt:
-                        if fc not in decoded:
-                            decoded[fc] = decode_column(cols[fc])
-                        m = _arrow_mask(decoded[fc], fop, fval, types[fc])
-                        amask = m if amask is None else (amask | m)
-                    mask = amask if mask is None else (mask & amask)
-                if mask is None or not mask.any():
-                    continue
-                already = mask_cache.positions(*key)
-                pos = np.flatnonzero(mask).astype(np.int64)
-                if already is not None:
-                    pos = pos[~np.isin(pos, already)]
-                if not len(pos):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
-                     pa.array(np.full(len(pos), key[1], dtype=np.int32)),
-                     pa.array(pos)],
-                    names=["pid", "chunk_id", "pos"])
-        if pending:
-            raise RuntimeError(
-                f"incomplete chunks (missing column rows): {sorted(pending)[:4]}")
+        for key, _, cols in chunks:
+            decoded: dict[str, pa.Array] = {}
+            mask = _conj_mask(cols, flt, types, decoded)
+            if any_flt:
+                amask: np.ndarray | None = None
+                for fc, fop, fval in any_flt:
+                    if fc not in decoded:
+                        decoded[fc] = decode_column(cols[fc])
+                    m = _arrow_mask(decoded[fc], fop, fval, types[fc])
+                    amask = m if amask is None else (amask | m)
+                mask = amask if mask is None else (mask & amask)
+            if mask is None or not mask.any():
+                continue
+            already = mask_cache.positions(*key)
+            pos = np.flatnonzero(mask).astype(np.int64)
+            if already is not None:
+                pos = pos[~np.isin(pos, already)]
+            if not len(pos):
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
+                 pa.array(np.full(len(pos), key[1], dtype=np.int32)),
+                 pa.array(pos)],
+                names=["pid", "chunk_id", "pos"])
 
     before = deleted_count(store)
-    tomb = chunks.mapInArrow(task, "pid int, chunk_id int, pos bigint")
+    tomb = scan_chunks(spark, store, fcols, task,
+                       "pid int, chunk_id int, pos bigint", flt, any_flt,
+                       pids=pids, types=types)
     # sorted layout => parquet row-group (pid, chunk_id) stats prune the
     # read-side pushed pid filter; append keeps prior tombstones intact
     (tomb.sortWithinPartitions("pid", "chunk_id", "pos")
@@ -276,13 +235,7 @@ def delete_matching(spark, store: str, col: str, keys_df,
     from pyspark.sql import DataFrame as SparkDataFrame
 
     from .agg import _packf_np
-    from .decode import (
-        _STRINGY,
-        _zone_key,
-        chunk_repartition,
-        column_arrow_types,
-        pruned_chunks,
-    )
+    from .decode import _STRINGY, _zone_key, column_arrow_types, scan_chunks
 
     if isinstance(keys_df, SparkDataFrame):
         if len(keys_df.columns) != 1:
@@ -315,14 +268,8 @@ def delete_matching(spark, store: str, col: str, keys_df,
     arrow_name = types[col]
     bkeys = spark.sparkContext.broadcast(
         sorted(r["_k"] for r in kdf.collect()))
-    chunks = pruned_chunks(spark, store, [col], [], dict_prune=False)
-    if pids is not None:
-        chunks = chunks.where(chunks["pid"].isin(sorted(pids)))
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), store)
 
-    def task(batches):
+    def task(chunks):
         import pyarrow.compute as pc
 
         from ..kernel.codecs import decode_column
@@ -331,53 +278,48 @@ def delete_matching(spark, store: str, col: str, keys_df,
         keys = bkeys.value
         # probe set built ONCE per task (never per chunk — 10^7 keys)
         probe = None
-        for batch in batches:
-            for pid_s, cid_s, codec_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("codec"), batch.column("params"),
-                    batch.column("payload")):
-                key = (pid_s.as_py(), cid_s.as_py())
-                arr = decode_column({"codec": codec_s.as_py(),
-                                     "params": json.loads(params_s.as_py()),
-                                     "payload": payload_s.as_py()})
-                if arrow_name in _STRINGY:
-                    if probe is None:
-                        probe = pa.array(list(keys), type=arr.type)
-                    mask = (pc.is_in(arr, value_set=probe).fill_null(False)
-                            .to_numpy(zero_copy_only=False).astype(bool))
+        for key, _, cols in chunks:
+            arr = decode_column(cols[col])
+            if arrow_name in _STRINGY:
+                if probe is None:
+                    probe = pa.array(list(keys), type=arr.type)
+                mask = (pc.is_in(arr, value_set=probe).fill_null(False)
+                        .to_numpy(zero_copy_only=False).astype(bool))
+            else:
+                if probe is None:
+                    probe = np.unique(np.array(
+                        [_zone_key(arrow_name, v)[0] for v in keys],
+                        dtype=np.int64))
+                valid = (pc.is_valid(arr)
+                         .to_numpy(zero_copy_only=False).astype(bool))
+                if arrow_name.startswith("timestamp["):
+                    lhs = (arr.cast(pa.int64()).fill_null(0)
+                           .to_numpy(zero_copy_only=False))
+                elif arrow_name in ("float", "double"):
+                    lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
+                                    .to_numpy(zero_copy_only=False))
                 else:
-                    if probe is None:
-                        probe = np.unique(np.array(
-                            [_zone_key(arrow_name, v)[0] for v in keys],
-                            dtype=np.int64))
-                    valid = (pc.is_valid(arr)
-                             .to_numpy(zero_copy_only=False).astype(bool))
-                    if arrow_name.startswith("timestamp["):
-                        lhs = (arr.cast(pa.int64()).fill_null(0)
-                               .to_numpy(zero_copy_only=False))
-                    elif arrow_name in ("float", "double"):
-                        lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
-                                        .to_numpy(zero_copy_only=False))
-                    else:
-                        lhs = (arr.cast(pa.int64()).fill_null(0)
-                               .to_numpy(zero_copy_only=False))
-                    mask = np.isin(lhs, probe) & valid
-                if not mask.any():
-                    continue
-                already = mask_cache.positions(*key)
-                pos = np.flatnonzero(mask).astype(np.int64)
-                if already is not None:
-                    pos = pos[~np.isin(pos, already)]
-                if not len(pos):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
-                     pa.array(np.full(len(pos), key[1], dtype=np.int32)),
-                     pa.array(pos)],
-                    names=["pid", "chunk_id", "pos"])
+                    lhs = (arr.cast(pa.int64()).fill_null(0)
+                           .to_numpy(zero_copy_only=False))
+                mask = np.isin(lhs, probe) & valid
+            if not mask.any():
+                continue
+            already = mask_cache.positions(*key)
+            pos = np.flatnonzero(mask).astype(np.int64)
+            if already is not None:
+                pos = pos[~np.isin(pos, already)]
+            if not len(pos):
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
+                 pa.array(np.full(len(pos), key[1], dtype=np.int32)),
+                 pa.array(pos)],
+                names=["pid", "chunk_id", "pos"])
 
     before = deleted_count(store)
-    tomb = chunks.mapInArrow(task, "pid int, chunk_id int, pos bigint")
+    tomb = scan_chunks(spark, store, [col], task,
+                       "pid int, chunk_id int, pos bigint", pids=pids,
+                       types=types)
     (tomb.sortWithinPartitions("pid", "chunk_id", "pos")
          .write.mode("append").parquet(_deletes_dir(store)))
     total = deleted_count(store)

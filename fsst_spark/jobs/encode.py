@@ -387,16 +387,13 @@ def _parquet_scan_files(df: DataFrame) -> list[str] | None:
     return paths
 
 
-def file_task_df(spark, rows: list, schema: str) -> DataFrame:
-    """One-partition-per-task DataFrame over a small driver-side task list
-    WITHOUT a shuffle: ``parallelize(numSlices=len(rows))`` pins one row
-    per partition deterministically by list position, where
-    ``createDataFrame(...).repartitionByRange`` pays a range-sampling job
-    plus an Exchange for the same layout. Used by every file-granular job
-    (encode, decode, verify)."""
-    n = max(1, len(rows))
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, n),
-                                 schema)
+def file_task_df(spark, n: int) -> DataFrame:
+    """The task list of every file-granular job (encode, decode, verify):
+    ``spark.range(0, n, 1, n)`` — row ``id`` i alone in partition i, so
+    task i handles the job's i-th file (the task function looks the file
+    up by ``id`` in a list its closure carries). The range is generated
+    JVM-side: no driver-side rows to serialize, no shuffle."""
+    return spark.range(0, n, 1, max(1, n))
 
 
 def _atomic_write(table: pa.Table, path: str) -> None:
@@ -710,15 +707,14 @@ def encode_files_job(
              if pid_offset + i not in done]
     if not tasks:
         return spark.createDataFrame([], METRIC_SCHEMA_DDL)
-    task_df = file_task_df(spark, tasks, "pid int, path string")
 
     def encode_file(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as _pc
         import pyarrow.parquet as _pq
 
         for batch in batches:
-            for task_row in batch.to_pylist():
-                pid, path = task_row["pid"], task_row["path"]
+            for i in batch.column("id").to_pylist():
+                pid, path = tasks[i]
                 pf = _pq.ParquetFile(path)
                 if sort_cols:
                     # sort needs the whole file resident (a file is one
@@ -743,7 +739,8 @@ def encode_files_job(
                 if row is not None:
                     yield from pa.Table.from_pylist([row], schema=METRIC_PA_SCHEMA).to_batches()
 
-    return task_df.mapInArrow(encode_file, METRIC_SCHEMA_DDL)
+    return file_task_df(spark, len(tasks)).mapInArrow(encode_file,
+                                                      METRIC_SCHEMA_DDL)
 
 
 def encode_files_batched(

@@ -186,20 +186,26 @@ def bloom_might_contain(blob: bytes, values: list) -> bool:
     """True unless the filter PROVES every probe value absent. Unknown
     blob versions return True (conservative: never prune on a filter we
     can't read)."""
+    return bloom_might_contain_hashes(
+        blob, np.array([_probe_hash(v) for v in values], dtype=np.uint64))
+
+
+def bloom_might_contain_hashes(blob: bytes, h1: np.ndarray) -> bool:
+    """:func:`bloom_might_contain` over precomputed probe hashes (``h1``
+    from :func:`_value_hashes` of the probe values): one numpy pass per
+    probe position however many values are probed, so a 10^5-key IN list
+    costs k vector ops per chunk instead of a Python loop per key."""
     if blob is None or len(blob) < _HEADER.size:
         return True
     magic, k, m_bits = _HEADER.unpack_from(blob)
     if magic != _MAGIC or len(blob) != _HEADER.size + m_bits // 8:
         return True
     bitmap = np.frombuffer(blob, np.uint8, offset=_HEADER.size)
-    mask = m_bits - 1
-    for v in values:
-        h1 = _probe_hash(v)
-        h2 = _splitmix64_one(h1) | 1
-        for i in range(k):
-            pos = (h1 + i * h2) & mask
-            if not (bitmap[pos >> 3] >> (pos & 7)) & 1:
-                break
-        else:
-            return True  # all k bits set: v may be present
-    return False
+    h2 = _splitmix64_vec(h1) | np.uint64(1)
+    m = np.uint64(m_bits - 1)
+    alive = np.ones(len(h1), dtype=bool)
+    for i in range(k):
+        pos = (h1 + np.uint64(i) * h2) & m
+        byte = bitmap[(pos >> np.uint64(3)).astype(np.int64)]
+        alive &= ((byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1) == 1
+    return bool(alive.any())

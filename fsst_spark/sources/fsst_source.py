@@ -11,21 +11,23 @@ writes like any other format::
                  .where("lang = 'de' AND n_chars >= 300"))
 
 Why this matters at 100 TB: ``pushFilters`` hands the WHERE clause to the
-source during planning, and each read task prunes its chunk file with the
-same metadata stack ``decode_filtered`` uses — zone maps, dictionary
-membership, Bloom filters — before touching any payload bytes. A fully
-pruned file costs one narrow-column footer read; payload columns of
-pruned files are never fetched (columnar parquet IO). Spark re-applies
-the exact row predicates on top (``pushFilters`` returns every filter as
-"still needs evaluation"), so chunk-granular pruning can never change
-results — the same conservative contract as parquet row-group stats.
+source during planning, and each read task runs the decode job's own
+per-file pruner (``jobs.decode._ChunkFile`` — zone maps, dictionary
+membership, Bloom filters) before touching any payload bytes. A fully
+pruned file costs one footer plus a few narrow metadata columns; payload
+columns of pruned files are never fetched (columnar parquet IO). Spark
+re-applies the exact row predicates on top (``pushFilters`` returns
+every filter as "still needs evaluation"), so chunk-granular pruning can
+never change results — the same conservative contract as parquet
+row-group stats.
 
 Execution shape: ``partitions()`` is one :class:`InputPartition` per
-chunk file (the encode task granularity), listed driver-side — the same
-O(#files) listing Spark's own ``FileIndex`` does for parquet. All
-pruning and decoding happens executor-side inside ``read()``; the driver
-never reads data. The write path routes each input partition through
-``jobs.encode._encode_one_partition`` — identical chunk layout, zone
+chunk file in pid order (the decode job's task list), listed
+driver-side — the same O(#files) listing Spark's own ``FileIndex`` does
+for parquet. All pruning and decoding happens executor-side inside
+``read()``; the driver never reads data. The write path routes each
+input partition through ``jobs.encode._encode_one_partition`` —
+identical chunk layout, zone
 maps, sketches, and atomic-rename durability as ``encode_job``, so a
 store written via ``df.write.format("fsst")`` is indistinguishable from
 one written by the job API.
@@ -33,9 +35,8 @@ one written by the job API.
 Column pruning: the Python DataSource API has no ``pruneColumns`` hook
 (Spark applies projection after the scan), so narrow reads opt in via
 ``.option("columns", "doc_id,lang")`` — the declared schema shrinks and
-``read()`` row-filters the chunk-file scan to the selected columns'
-rows, so pruned columns' payload bytes are never decompressed (and with
-parquet row-group filtering, largely never read).
+``read()`` decodes only the selected columns' rows, so pruned columns'
+payload bytes are never decompressed.
 
 Streaming: ``spark.readStream.format("fsst").load(store)`` follows a
 GROWING store. Each completed write appends one atomic entry to
@@ -83,10 +84,6 @@ from pyspark.sql.datasource import (
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
-
-# narrow projection that drives pruning: everything except payload bytes
-_META_COLS = ["pid", "chunk_id", "column", "codec", "params",
-              "zmin_long", "zmax_long"]
 
 _FILTER_OPS = {
     EqualTo: "==",
@@ -233,9 +230,10 @@ def log_commit_snapshot(store: str) -> int | None:
 def _translate_filter(f: Filter, col_types: dict[str, str]):
     """One Spark Filter -> internal (col, op, value) prune tuple, or None
     when the filter can't drive chunk pruning (unsupported shape, nested
-    column, or a value the zone packer rejects — e.g. a float probe on an
-    int column). Returning None only skips pruning; Spark still applies
-    the exact predicate because ``pushFilters`` echoes every filter back."""
+    column, or a value the pruner's compile rejects — e.g. a float probe
+    on an int column). Returning None only skips pruning; Spark still
+    applies the exact predicate because ``pushFilters`` echoes every
+    filter back."""
     op = _FILTER_OPS.get(type(f))
     if op is None or len(f.attribute) != 1:
         return None
@@ -244,137 +242,12 @@ def _translate_filter(f: Filter, col_types: dict[str, str]):
         return None
     value = list(f.value) if op == "in" else f.value
     try:
-        from ..jobs.decode import _prefix_bytes, _zone_key
+        from ..jobs.decode import compile_filters
 
-        if op in ("prefix", "contains", "suffix"):
-            _prefix_bytes(col_types[col], value, op)
-        else:
-            for v in (value if op == "in" else [value]):
-                _zone_key(col_types[col], v)  # type check only
+        compile_filters([(col, op, value)], col_types)
     except (TypeError, ValueError):
         return None
     return (col, op, value)
-
-
-def _file_survivors(path: str, filters: list[tuple],
-                    col_types: dict[str, str]) -> "set[tuple[int, int]] | None":
-    """(pid, chunk_id) keys in one chunk file that survive every pruning
-    stage for the conjunction ``filters`` — or None for "all survive"
-    (no filters), letting the caller skip the key-membership filter.
-
-    Stage order mirrors ``pruned_chunks``: zone intervals first (needs
-    only the already-read meta columns), then dictionary membership and
-    Bloom probes, which read the filter column's payload/bloom cells for
-    still-live chunks only. Everything here runs in the read task —
-    driver-side cost stays O(#files)."""
-    import pyarrow.parquet as pq
-
-    from ..jobs.decode import _STRINGY, zone_keep
-
-    if not filters:
-        return None
-    have = set(pq.read_schema(path).names)
-    meta = pq.read_table(path, columns=[c for c in _META_COLS if c in have])
-    n = meta.num_rows
-    zmins = (meta.column("zmin_long").to_pylist() if "zmin_long" in have
-             else [None] * n)  # pre-zone-map store: conservatively keep all
-    zmaxs = (meta.column("zmax_long").to_pylist() if "zmax_long" in have
-             else [None] * n)
-    zones: dict[tuple[str, tuple[int, int]], tuple] = {}
-    keys: set[tuple[int, int]] = set()
-    for pid, cid, col, zmin, zmax in zip(
-            meta.column("pid").to_pylist(), meta.column("chunk_id").to_pylist(),
-            meta.column("column").to_pylist(), zmins, zmaxs):
-        keys.add((pid, cid))
-        zones[(col, (pid, cid))] = (zmin, zmax)
-    live = {
-        k for k in keys
-        if all(zone_keep(col_types[col], op, value, *zones.get((col, k), (None, None)))
-               for col, op, value in filters)
-    }
-    for col, op, value in filters:
-        if not live:
-            break
-        if col_types[col] in _STRINGY and op in ("==", "in", "prefix",
-                                                 "contains", "suffix"):
-            live = _dict_survivors(path, meta, col, op, value, live)
-        if op in ("==", "in"):
-            live = _bloom_survivors(path, meta, col, value, col_types[col], live)
-    return live
-
-
-def _bloom_survivors(path: str, meta: "pa.Table", col: str, value,
-                     arrow_name: str, live: set) -> set:
-    """Drop live chunks whose Bloom filter proves every probed value
-    absent — the same typing rules as ``_bloom_value_drop`` (strings
-    hash natively, ints as-is, timestamps in storage-unit ticks)."""
-    import pyarrow.parquet as pq
-
-    from ..jobs.decode import _INTY, _STRINGY, _ts_ticks
-    from ..kernel.bloom import bloom_might_contain
-
-    vals = value if isinstance(value, (list, tuple, set)) else [value]
-    if arrow_name in _STRINGY:
-        probes = list(vals)
-    elif arrow_name in _INTY:
-        probes = [int(v) for v in vals]
-    elif arrow_name.startswith("timestamp["):
-        probes = [_ts_ticks(arrow_name, v) for v in vals]
-    else:
-        return live
-    if "bloom" not in pq.read_schema(path).names:
-        return live  # pre-bloom store
-    rows = [
-        i for i, c in enumerate(meta.column("column").to_pylist())
-        if c == col
-        and (meta.column("pid")[i].as_py(), meta.column("chunk_id")[i].as_py()) in live
-    ]
-    if not rows:
-        return live
-    blooms = pq.read_table(path, columns=["pid", "chunk_id", "bloom"])
-    out = set(live)
-    for i in rows:
-        blob = blooms.column("bloom")[i].as_py()
-        if blob is None:
-            continue  # dict-coded / bloom-less chunk: conservatively keep
-        key = (blooms.column("pid")[i].as_py(), blooms.column("chunk_id")[i].as_py())
-        if not bloom_might_contain(blob, probes):
-            out.discard(key)
-    return out
-
-
-def _dict_survivors(path: str, meta: "pa.Table", col: str, op: str, value,
-                    live: set) -> set:
-    """Drop live chunks whose str_dict dictionary provably lacks every
-    probed value. Runs only when the file has live dict-coded rows for
-    the filter column, and decodes only their dictionary sections (the
-    payload column read is file-granular — parquet IO can't slice rows
-    within a row group — but the decode cost stays dictionary-only)."""
-    import pyarrow.parquet as pq
-
-    from ..jobs.decode import _dict_probes, dict_payload_has_value
-
-    rows = [
-        i for i, (c, codec) in enumerate(zip(meta.column("column").to_pylist(),
-                                             meta.column("codec").to_pylist()))
-        if c == col and codec == "str_dict"
-        and (meta.column("pid")[i].as_py(), meta.column("chunk_id")[i].as_py()) in live
-    ]
-    if not rows:
-        return live
-    by_len, pfx, sub, sfx = _dict_probes(value, prefix=op == "prefix",
-                                         contains=op == "contains",
-                                         suffix=op == "suffix")
-    full = pq.read_table(path, columns=["pid", "chunk_id", "params", "payload"])
-    out = set(live)
-    for i in rows:
-        key = (meta.column("pid")[i].as_py(), meta.column("chunk_id")[i].as_py())
-        params = json.loads(full.column("params")[i].as_py())
-        payload = full.column("payload")[i].as_py()
-        if not dict_payload_has_value(params, payload, by_len, pfx, sub,
-                                      sfx):
-            out.discard(key)
-    return out
 
 
 class FsstReader(DataSourceReader):
@@ -434,8 +307,9 @@ class FsstReader(DataSourceReader):
                                                      f"part-{pid:05d}.parquet"))
                     for pid in sorted(pids)
                 ]
-        files = sorted(glob.glob(os.path.join(self.store, "chunks", "*.parquet")))
-        return [_ChunkFilePartition(f) for f in files]
+        from ..jobs.decode import chunk_files
+
+        return [_ChunkFilePartition(f) for f in chunk_files(self.store)]
 
     def read(self, partition: _ChunkFilePartition) -> Iterator["pa.RecordBatch"]:
         return _read_chunk_file(partition.path, self.col_types, self.pruning)
@@ -444,15 +318,15 @@ class FsstReader(DataSourceReader):
 def _read_chunk_file(path: str, col_types: dict[str, str],
                      pruning: list[tuple]) -> Iterator["pa.RecordBatch"]:
     """Decode one chunk file into RecordBatches of ``col_types``' columns
-    (shared by the batch and stream readers). When ``col_types`` is a
-    projection (the ``columns`` read option), the parquet scan row-filters
-    to the selected columns, so pruned columns' payloads are never
-    decompressed — and pruning stages still only read the filter columns."""
+    (shared by the batch and stream readers) through the decode job's
+    pruner: only chunks that survive ``pruning`` and only the rows of
+    ``col_types``' columns (the ``columns`` read option) are read and
+    decompressed."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..env import madvise_hugepages
-    from ..jobs.deletes import DeleteMask, has_deletes
+    from ..jobs.decode import _ChunkFile, compile_filters
+    from ..jobs.deletes import DeleteMask, apply_delete_mask, has_deletes
     from ..kernel.codecs import decode_column
 
     madvise_hugepages()
@@ -460,50 +334,16 @@ def _read_chunk_file(path: str, col_types: dict[str, str],
     # <store>/chunks/, so the store root is two levels up
     store_root = os.path.dirname(os.path.dirname(path))
     dmask = DeleteMask(store_root) if has_deletes(store_root) else None
-    live = _file_survivors(path, pruning, col_types)
-    if live is not None and not live:
-        return  # fully pruned: payload column bytes were never read
     ordered = sorted(col_types)
     target = _arrow_schema(col_types, ordered)
-    from ..jobs.schema import added_columns
-
-    all_added = set(added_columns(store_root))
-    added = all_added & set(col_types)
-    scan_cols = list(ordered)
-    if added and set(ordered) <= added:
-        # only schema-log-added columns requested: scan one column that
-        # exists in EVERY chunk as the row-count carrier (dropped before
-        # emit) — exclude the whole added log, since a materialized add
-        # is physical in new files but absent from pre-add chunks
-        phys = sorted(set(store_column_types(store_root)) - all_added)
-        if phys:
-            scan_cols.append(phys[0])
-    tbl = pq.read_table(
-        path,
-        columns=["pid", "chunk_id", "column", "codec", "params", "payload"],
-        filters=[("column", "in", scan_cols)])
-    chunks: dict[tuple[int, int], dict] = {}
-    # zip arrow scalars; .as_py() materializes a payload only for
-    # chunks that survived pruning
-    for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
-            tbl.column("pid"), tbl.column("chunk_id"), tbl.column("column"),
-            tbl.column("codec"), tbl.column("params"), tbl.column("payload")):
-        key = (pid_s.as_py(), cid_s.as_py())
-        if live is not None and key not in live:
-            continue
-        chunks.setdefault(key, {})[col_s.as_py()] = decode_column(
-            {"codec": codec_s.as_py(), "params": json.loads(params_s.as_py()),
-             "payload": payload_s.as_py()})
-    for key in sorted(chunks):
-        cols = chunks[key]
-        n = len(next(iter(cols.values()))) if cols else 0
+    f = _ChunkFile(path)
+    _, kept = f.prune(compile_filters(pruning, col_types))
+    for key, n, enc in f.chunks(kept, ordered):
         # pre-add chunks lack rows for schema-log-added columns: virtual NULLs
-        arrays = [(cols[c].cast(target.field(i).type) if c in cols
-                   else pa.nulls(n, target.field(i).type))
+        arrays = [(decode_column(enc[c]).cast(target.field(i).type)
+                   if c in enc else pa.nulls(n, target.field(i).type))
                   for i, c in enumerate(ordered)]
         if dmask is not None:
-            from ..jobs.deletes import apply_delete_mask
-
             arrays = apply_delete_mask(dmask, key[0], key[1], arrays)
             if arrays is None:
                 continue  # every row of the chunk tombstoned

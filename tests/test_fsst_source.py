@@ -7,9 +7,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from fsst_spark.jobs.decode import _file_survivors
 from fsst_spark.sources.fsst_source import (
     FsstReader,
-    _file_survivors,
     register,
     store_column_types,
 )

@@ -1,10 +1,11 @@
-"""Ordered decode: global (pid, chunk_id, row) order from a range
-partition of chunk METADATA — no row-level sort anywhere in the plan.
+"""Ordered decode: every decode comes out in global (pid, chunk_id, row)
+order — one task per chunk file, files in pid order — with no row-level
+sort anywhere in the plan.
 
 On a store clustered by sort_key the output is cluster-key order, so the
 tests pin: collected rows arrive exactly sorted, content is identical to
-the unordered decode, and the physical plan contains no Sort over the
-decoded rows (only the chunk-metadata in-partition sort).
+a plain collect, and the physical plan contains no Sort over the decoded
+rows.
 """
 
 import json
@@ -32,22 +33,20 @@ def store(spark, tmp_path_factory):
 
 
 def test_ordered_decode_is_globally_sorted(spark, store):
-    got = decode_job(spark, store, ordered=True)
+    got = decode_job(spark, store)
     ids = [r["doc_id"] for r in got.collect()]  # partition-concat order
     assert ids == sorted(ids)
     assert len(ids) == 12000
-    # content identical to the unordered decode
-    plain = decode_job(spark, store)
-    assert sorted(r["txt"] for r in plain.select("txt").collect()) == \
-        sorted(r["txt"] for r in got.select("txt").collect())
+    # content identical to the decode's own rows
+    assert sorted(r["txt"] for r in got.select("txt").collect()) == \
+        sorted(f"b-{i}" for i in range(12000))
 
 
 def test_no_row_level_sort_in_plan(spark, store):
-    plan = decode_job(spark, store, ordered=True) \
+    plan = decode_job(spark, store) \
         ._jdf.queryExecution().executedPlan().toString()
-    # the only Sort allowed is the chunk-METADATA in-partition sort that
-    # runs BELOW the decode (over pid/chunk_id/payload rows); no sort may
-    # consume the decoded output (it would be a row-scale shuffle at 100TB)
+    # no sort may consume the decoded output (it would be a row-scale
+    # shuffle at 100TB)
     decode_op = "MapInArrow"
     assert decode_op in plan
     above_decode = plan.split(decode_op)[0]
@@ -58,7 +57,7 @@ def test_cli_ordered_export(spark, store, tmp_path):
     out = str(tmp_path / "sorted")
     r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
-         "--data", store, "--ordered", "--out", out],
+         "--data", store, "--out", out],
         capture_output=True, text=True, timeout=600, cwd="/root/repo")
     assert r.returncode == 0, r.stderr[-2000:]
     import duckdb
@@ -68,9 +67,14 @@ def test_cli_ordered_export(spark, store, tmp_path):
         f"SELECT doc_id FROM read_parquet('{out}/part-*.parquet', "
         "filename=false)").fetchall()]
     assert ids == sorted(ids) and len(ids) == 12000
-    bad = subprocess.run(
+    # a --where export keeps the same order
+    where_out = str(tmp_path / "sorted_where")
+    r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
-         "--data", store, "--ordered", "--where", "doc_id:<:10",
-         "--out", out],
+         "--data", store, "--where", "doc_id:<:5000", "--out", where_out],
         capture_output=True, text=True, timeout=600, cwd="/root/repo")
-    assert bad.returncode != 0
+    assert r.returncode == 0, r.stderr[-2000:]
+    ids = [x[0] for x in duckdb.sql(
+        f"SELECT doc_id FROM read_parquet('{where_out}/part-*.parquet', "
+        "filename=false)").fetchall()]
+    assert ids == list(range(5000))

@@ -23,15 +23,14 @@ def encoded(spark, tmp_path_factory):
 
 
 def test_decode_pushes_column_filter_to_scan(spark, encoded):
-    # PRUNED decodes go through the JVM metadata scan: the column filter
-    # must reach the parquet scan as a pushed filter
+    # PRUNED decodes prune inside the per-file read tasks: no shuffle, and
+    # no JVM scan ships payload bytes into the plan
     dec = decode_job(spark, encoded, columns=["lang"],
                      zone_filter=("lang", "==", "en"))
     plan = _plan(dec)
-    scan = plan[plan.index("FileScan"):]
-    first_line = scan.split("\n")[0]
-    assert "PushedFilters" in first_line
-    assert "In(column" in first_line or "EqualTo(column" in first_line, first_line
+    assert "Exchange" not in plan, plan
+    assert not any("payload" in line for line in plan.splitlines()
+                   if "Scan" in line), plan
 
 
 def test_decode_scan_prunes_payload_metadata(spark, encoded):

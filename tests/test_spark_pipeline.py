@@ -82,12 +82,14 @@ def test_decode_column_pruning(spark, encoded_dir):
 
 
 def test_decode_filtered_scan_pushdown(spark, encoded_dir):
-    # the pruned (zone-filter) path still scans chunk metadata through the
-    # JVM with the column filter pushed into parquet
+    # the pruned (zone-filter) path prunes inside the per-file read tasks:
+    # no shuffle, and no JVM scan ships payload bytes into the plan
     dec = decode_job(spark, encoded_dir, columns=["lang", "url"],
                      zone_filter=("lang", "==", "en"))
     plan = dec._jdf.queryExecution().executedPlan().toString()
-    assert "column" in plan
+    assert "Exchange" not in plan, plan
+    assert not any("payload" in line for line in plan.splitlines()
+                   if "Scan" in line), plan
 
 
 def test_resume_after_injected_failure(spark, corpus, tmp_path):
